@@ -35,6 +35,20 @@ def test_full_report_run_publishes_three_csvs(spark, tmp_path):
     assert res2["rows"] == res["rows"]
 
 
+def test_full_report_run_scans_alerts_once(spark, tmp_path):
+    """One report run touches the alert API once: the page-0 probe plus
+    the ceil(237 / 100) = 3 page fetches, and nothing more for the
+    returned row counts."""
+    url = mock_api.mock_server_url()
+    srv = mock_api.server_state()
+    srv.alert_request_log = []
+    res = full_report_run(spark, url, mock_api.MOCK_USER,
+                          mock_api.MOCK_PASSWORD, str(tmp_path), date(2024, 2, 3))
+    assert res["rows"] == {"inventory": 3, "alerts": 21}
+    limits = sorted(lim for _, lim in srv.alert_request_log)
+    assert limits == [1, 100, 100, 100], limits
+
+
 def test_alert_report_golden_csv_bytes(spark, tmp_path):
     """SURVEY §5.4: golden CSV bytes for the alert report at a fixed run
     date, in the reference's exact QUOTE_NONNUMERIC format."""

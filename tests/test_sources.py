@@ -211,6 +211,50 @@ def test_rate_limit_bounds_aggregate_rate_across_partitions(spark, url, client):
     assert sum(g < delay for g in gaps) >= 3
 
 
+def test_indexed_paging_without_total_walks_the_chain(spark, url, client):
+    """Default (indexed) paging on an endpoint that reports no
+    X-Total-Count must not plan one page and return a truncated scan:
+    it falls back to the serial chain walk and returns every row."""
+    register_alerts_source(spark)
+    df = (spark.read.format("prisma_alerts")
+          .option("base_url", url).option("token", client.token)
+          .option("path", "/v2/alerts-opaque")
+          .option("backoff_factor", "0.01").load())
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == mock_api.N_ALERTS
+
+
+def test_total_count_header_is_case_insensitive():
+    from tf_prisma_api_data_ingestion_spark.sources.rest import _total_count
+    assert _total_count({"X-Total-Count": "237"}) == 237
+    assert _total_count({"x-total-count": "237"}) == 237  # HTTP/2 proxies
+    assert _total_count({"Content-Type": "application/json"}) is None
+
+
+def test_token_fanout_paces_bodied_cursor_walk(spark, url, client):
+    """Without probe_key the fanout planner's cursor walk downloads full
+    pages, so with rate_limit set its request starts are spaced at least
+    1/rate_limit apart."""
+    register_alerts_source(spark)
+    rate = 5.0
+    srv = mock_api.server_state()
+    srv.opaque_request_log = []
+    df = (spark.read.format("prisma_alerts")
+          .option("base_url", url).option("token", client.token)
+          .option("path", "/v2/alerts-opaque")
+          .option("paging", "token-fanout")
+          .option("rate_limit", str(rate))
+          .option("backoff_factor", "0.01").load())
+    assert df.count() == mock_api.N_ALERTS
+    log = sorted(srv.opaque_request_log)
+    # the walk is every request before the limit=1 cursor re-use probe
+    probe = [lim for _, lim in log].index(1)
+    walk = [t for t, _ in log[:probe]]
+    assert len(walk) == 3  # ceil(237 / 100) bodied pages
+    gaps = [b - a for a, b in zip(walk, walk[1:])]
+    assert all(g >= 1 / rate - 0.02 for g in gaps), gaps
+
+
 def test_retry_after_header_is_honored(monkeypatch):
     import urllib.error
     from tf_prisma_api_data_ingestion_spark.sources.rest import _retry_delay

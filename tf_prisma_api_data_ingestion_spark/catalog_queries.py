@@ -941,13 +941,18 @@ def q_text_fingerprint(spark, sf_dir):
 # constants, so the oracles are VALUES / range() SQL — full hash checks)
 # =====================================================================
 
+def _mock_login():
+    """A client logged in to the in-process mock API."""
+    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
+    from .sources.rest import RestClient
+    return RestClient(mock_server_url(), username=MOCK_USER,
+                      password=MOCK_PASSWORD, backoff_factor=0.01).login()
+
+
 def q_src_login(spark, sf_dir):
     """src-login (P:36-73): explicit auth handshake (never at import time,
     §2.5.2); the token stays client-state, never a column."""
-    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
-    from .sources.rest import RestClient
-    client = RestClient(mock_server_url(), username=MOCK_USER,
-                        password=MOCK_PASSWORD, backoff_factor=0.01).login()
+    client = _mock_login()
     return spark.createDataFrame(
         [(client.token is not None, len(client.token or ""))],
         "login_ok BOOLEAN, token_len INT")
@@ -957,17 +962,8 @@ def q_src_get_json(spark, sf_dir):
     """src-get-json (P:75-103): authed GET -> typed DataFrame via explicit
     StructType contract (§1.3), flatten + na.fill like the reference's
     inventory path (P:165-178)."""
-    from .operators.json_ops import flatten_array_of_structs
-    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
-    from .sources.rest import RestClient
-    client = RestClient(mock_server_url(), username=MOCK_USER,
-                        password=MOCK_PASSWORD, backoff_factor=0.01).login()
-    body = client.get_json("/v1/inventory").body
-    schema = ("timestamp LONG, requestedTimestamp LONG, groupedAggregates "
-              "ARRAY<STRUCT<serviceName STRING, cloudTypeName STRING, "
-              "failedResources LONG, passedResources LONG, totalResources LONG>>")
-    df = spark.createDataFrame([body], schema).select("groupedAggregates")
-    return flatten_array_of_structs(df, "groupedAggregates").na.fill(0)
+    from .plans.e2e import inventory_frame
+    return inventory_frame(spark, _mock_login().get_json("/v1/inventory").body)
 
 
 def q_src_paginated_post(spark, sf_dir):
@@ -976,15 +972,8 @@ def q_src_paginated_post(spark, sf_dir):
     executors pull pages independently — vs the reference's serial
     1 page/s driver loop), then an alert-shaped aggregation. The empty
     cloudAccountGroups rows (§2.5.6) are counted null-safely."""
-    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
-    from .sources.rest import RestClient, register_alerts_source
-    url = mock_server_url()
-    client = RestClient(url, username=MOCK_USER, password=MOCK_PASSWORD,
-                        backoff_factor=0.01).login()
-    register_alerts_source(spark)
-    alerts = (spark.read.format("prisma_alerts")
-              .option("base_url", url).option("token", client.token)
-              .option("backoff_factor", "0.01").load())
+    from .plans.e2e import alerts_scan
+    alerts = alerts_scan(spark, _mock_login())
     return (alerts.groupBy("account")
             .agg(F.count("*").alias("n_alerts"),
                  F.min("accountId").alias("min_account_id"),
@@ -1000,14 +989,11 @@ def q_src_stream_alerts(spark, sf_dir):
     the whole export (the reference Lambda's model). Result aggregated
     per cloud for a compact deterministic snapshot; oracle replays the
     mock's alert formula over range(237)."""
-    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
-    from .sources.rest import RestClient, register_alerts_stream_source
-    url = mock_server_url()
-    client = RestClient(url, username=MOCK_USER, password=MOCK_PASSWORD,
-                        backoff_factor=0.01).login()
+    from .sources.rest import register_alerts_stream_source
+    client = _mock_login()
     register_alerts_stream_source(spark)
     stream = (spark.readStream.format("prisma_alerts_stream")
-              .option("base_url", url).option("token", client.token)
+              .option("base_url", client.base_url).option("token", client.token)
               .option("backoff_factor", "0.01").load())
     q = (stream.writeStream.format("memory").queryName("src_stream_alerts")
          .trigger(availableNow=True).start())
@@ -1255,27 +1241,8 @@ def q_plan_e2e_alert(spark, sf_dir):
     (partition-per-page) -> broadcast join to the policy frame -> the
     alert-report stages (P:210-369). The mock's alert formula makes the
     whole pipeline range()-reproducible for the oracle."""
-    from .plans.report import alert_report_from_fixtures
-    from .sources.mock_api import MOCK_PASSWORD, MOCK_USER, mock_server_url
-    from .sources.rest import RestClient, register_alerts_source
-    url = mock_server_url()
-    client = RestClient(url, username=MOCK_USER, password=MOCK_PASSWORD,
-                        backoff_factor=0.01).login()
-    register_alerts_source(spark)
-    alerts = (spark.read.format("prisma_alerts")
-              .option("base_url", url).option("token", client.token)
-              .option("backoff_factor", "0.01").load()
-              .withColumn("policyId", F.concat(F.lit("pol-"), F.col("cloudType"))))
-    policies = spark.createDataFrame(
-        [("pol-aws", "AWS baseline", "config", "high"),
-         ("pol-azure", "Azure baseline", "config", "medium"),
-         ("pol-gcp", "GCP baseline", "config", "low")],
-        "policyId STRING, policyName STRING, policyType STRING, severity STRING")
-    items = alerts.select(
-        "policyId",
-        F.struct("account", "accountId", "cloudType", "cloudAccountGroups")
-         .alias("resource"))
-    return alert_report_from_fixtures(policies, items)
+    from .plans.e2e import alert_report_frame
+    return alert_report_frame(spark, _mock_login())
 
 
 def q_plan_inventory_report(spark, sf_dir):

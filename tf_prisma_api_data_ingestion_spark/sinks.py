@@ -29,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Mapping
 from datetime import date
 
 from pyspark.sql import DataFrame
@@ -153,12 +152,6 @@ def write_reference_layout(df: DataFrame, base: str, run_date: date,
     write_csv_report(df, path, single_file=True,
                      quote_nonnumeric=quote_nonnumeric, order_by=order_by)
     return path
-
-
-def run_date_literals(run_date: date) -> Mapping[str, str]:
-    """The reference's per-run constant columns (lambda.py:175-177) as a
-    pure function of run_date — no module-global state (§2.5.1)."""
-    return {"transaction_date": run_date.strftime("%Y-%m-%d")}
 
 
 class StagedRun:

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 MOCK_TOKEN = "tok-mock-01"
@@ -70,6 +71,12 @@ class _Handler(BaseHTTPRequestHandler):
         return (not expired
                 and self.headers.get("x-redlock-auth") == MOCK_TOKEN)
 
+    def _log_request(self, log: str, payload: dict) -> None:
+        # side-band request-start log for rate-limit tests (never in
+        # response bodies, so the VALUES/range() oracles stay pure)
+        self.server.__dict__.setdefault(log, []).append(
+            (time.time(), int(payload.get("limit", PAGE_SIZE))))
+
     # ------------------------------------------------------------- GET --
     def do_GET(self):
         if self.path.startswith("/flaky"):
@@ -106,14 +113,9 @@ class _Handler(BaseHTTPRequestHandler):
             if not self._authed():
                 self._send(401, {"error": "unauthorized"})
                 return
-            # side-band test instrumentation (never in response bodies, so
-            # the VALUES/range() oracles stay pure): request-start log for
-            # rate-limit assertions + opt-in artificial latency
-            import time as _time
-            self.server.__dict__.setdefault("alert_request_log", []).append(
-                (_time.time(), int(payload.get("limit", PAGE_SIZE))))
-            if payload.get("_delay"):
-                _time.sleep(float(payload["_delay"]))
+            self._log_request("alert_request_log", payload)
+            if payload.get("_delay"):  # opt-in artificial latency
+                time.sleep(float(payload["_delay"]))
             limit = int(payload.get("limit", PAGE_SIZE))
             tok = payload.get("pageToken")
             page = int(tok.split("-")[1]) if tok else 0
@@ -132,6 +134,7 @@ class _Handler(BaseHTTPRequestHandler):
             if not self._authed():
                 self._send(401, {"error": "unauthorized"})
                 return
+            self._log_request("opaque_request_log", payload)
             import hashlib
             # setdefault on the instance __dict__ is atomic under the
             # GIL — two concurrent first requests must share ONE map or
@@ -183,5 +186,6 @@ def mock_server_url() -> str:
 
 def server_state() -> ThreadingHTTPServer | None:
     """The live in-process server, for test-side inspection of side-band
-    instrumentation (e.g. ``alert_request_log``); None before first use."""
+    instrumentation (``alert_request_log``, ``opaque_request_log``); None
+    before first use."""
     return _SERVER

@@ -27,6 +27,7 @@ exponential backoff.
 
 from __future__ import annotations
 
+import itertools
 import json
 import math
 import time
@@ -124,19 +125,16 @@ class RestClient:
         lambda.py:73) and dies mid-scan when the token expires. Without
         credentials (e.g. a token-only executor client) the 401 raises.
         """
-        try:
-            return request_with_backoff(url, method=method,
-                                        headers=self._headers(), payload=payload,
-                                        retries=self.retries,
-                                        backoff_factor=self.backoff_factor)
-        except urllib.error.HTTPError as e:
-            if e.code != 401 or not self.username:
-                raise
-            self.login()
-            return request_with_backoff(url, method=method,
-                                        headers=self._headers(), payload=payload,
-                                        retries=self.retries,
-                                        backoff_factor=self.backoff_factor)
+        for attempt in range(2):
+            try:
+                return request_with_backoff(url, method=method,
+                                            headers=self._headers(), payload=payload,
+                                            retries=self.retries,
+                                            backoff_factor=self.backoff_factor)
+            except urllib.error.HTTPError as e:
+                if attempt or e.code != 401 or not self.username:
+                    raise
+                self.login()
 
     def get_json(self, path: str, params: str = "") -> RestResponse:
         """GET with auth header (src-get-json); re-auths once on 401."""
@@ -146,6 +144,38 @@ class RestClient:
     def post_json(self, path: str, payload: dict) -> RestResponse:
         return self._authed(self.base_url + path, method="POST",
                             payload=payload)
+
+
+class _Pacer:
+    """Spaces a serial page loop's request starts ``interval`` seconds
+    apart (0 = unpaced): the reference's ``time.sleep(1)`` (P:268)."""
+
+    def __init__(self, interval: float):
+        self.interval = interval
+        self._next_ok = 0.0
+
+    def wait(self) -> None:
+        if self.interval > 0:
+            now = time.time()
+            if now < self._next_ok:
+                time.sleep(self._next_ok - now)
+            self._next_ok = max(now, self._next_ok) + self.interval
+
+
+def _chain(client: RestClient, path: str, payload: dict, page_size: int,
+           min_interval: float) -> Iterator[tuple[str | None, dict]]:
+    """Walk the ``nextPageToken`` chain from the first page, yielding each
+    page's (pageToken, body) until a page names no next token."""
+    pacer, token = _Pacer(min_interval), None
+    while True:
+        pacer.wait()
+        body = client.post_json(path, dict(
+            payload, limit=page_size,
+            **({"pageToken": token} if token else {}))).body
+        yield token, body
+        token = body.get("nextPageToken")
+        if not token:
+            return
 
 
 def fetch_all_pages(client: RestClient, path: str, payload: dict,
@@ -161,20 +191,11 @@ def fetch_all_pages(client: RestClient, path: str, payload: dict,
     reference's fixed ``time.sleep(1)`` (P:268) generalized to a
     configurable request budget.
     """
-    token: str | None = None
-    next_ok = 0.0
-    for _ in range(max_pages):
-        if min_interval > 0:
-            now = time.time()
-            if now < next_ok:
-                time.sleep(next_ok - now)
-            next_ok = max(now, next_ok) + min_interval
-        body = dict(payload, limit=page_size, **({"pageToken": token} if token else {}))
-        resp = client.post_json(path, body)
-        items = resp.body.get("items", [])
+    for _, body in itertools.islice(
+            _chain(client, path, payload, page_size, min_interval), max_pages):
+        items = body.get("items", [])
         yield from items
-        token = resp.body.get("nextPageToken")
-        if len(items) < page_size or not token:
+        if len(items) < page_size or not body.get("nextPageToken"):
             return
     raise RuntimeError(f"pagination exceeded max_pages={max_pages}")
 
@@ -193,6 +214,48 @@ def _alert_row(item: dict) -> tuple:
             r.get("cloudAccountGroups", []))
 
 
+def _total_count(headers: dict) -> int | None:
+    """``X-Total-Count`` looked up case-insensitively (HTTP/2 proxies
+    lower-case header names); None when the API reports no total."""
+    return next((int(v) for k, v in headers.items()
+                 if k.lower() == "x-total-count"), None)
+
+
+class _AlertsOptions:
+    """Reader options shared by the batch and streaming alert sources."""
+
+    def __init__(self, options):
+        self.base_url = options["base_url"]
+        self.token = options.get("token", "")
+        self.path = options.get("path", "/v2/alerts")
+        self.page_size = int(options.get("page_size", "100"))
+        self.backoff = float(options.get("backoff_factor", "1.0"))
+        self.filters = json.loads(options.get("filters", "{}"))
+        self.paging = options.get("paging", "indexed")
+        self.probe_key = options.get("probe_key", "")
+        self.max_pages = int(options.get("max_pages", "10000"))
+        self.username = options.get("username", "")
+        self.password = options.get("password", "")
+        self.prisma_id = options.get("prisma_id", "")
+        rate_limit = float(options.get("rate_limit", "0"))
+        # seconds between serial request starts (0 = unpaced)
+        self.interval = 1.0 / rate_limit if rate_limit > 0 else 0.0
+        if self.paging not in ("indexed", "token", "token-fanout"):
+            raise ValueError("paging must be indexed|token|token-fanout,"
+                             f" got {self.paging!r}")
+
+    def _client(self) -> RestClient:
+        return RestClient(self.base_url, backoff_factor=self.backoff,
+                          token=self.token, username=self.username,
+                          password=self.password, prisma_id=self.prisma_id)
+
+    def _items(self, token: str | None) -> list:
+        """Items of one page request (``token`` None = the first page)."""
+        body = dict(self.filters, limit=self.page_size,
+                    **({"pageToken": token} if token else {}))
+        return self._client().post_json(self.path, body).body.get("items", [])
+
+
 def register_alerts_source(spark) -> None:
     """Register the ``prisma_alerts`` format. Import is deferred so the
     module stays importable on Spark < 4 (the DataSource API is 4.0+).
@@ -201,9 +264,12 @@ def register_alerts_source(spark) -> None:
 
     - ``indexed`` (default): PRECONDITION — the endpoint must accept
       index-addressable page tokens (``pageToken: "page-{i}"``) and
-      report ``X-Total-Count``. Only then can the planner emit one input
-      partition per page for parallel executor-side fetch. The real
-      Prisma Cloud API does NOT satisfy this: its ``nextPageToken``
+      report ``X-Total-Count`` (any header-name case). Only then can the
+      planner emit one input partition per page for parallel
+      executor-side fetch. When the page-0 probe reports no total, the
+      plan falls back to the serial ``token`` walk (one partition) so
+      the scan still returns every row. The real Prisma Cloud API does
+      NOT satisfy the precondition: its ``nextPageToken``
       (lambda.py:266-318) is an opaque server-issued token that can only
       be discovered by walking the chain.
     - ``token-fanout``: opaque-token parallel mode for production APIs.
@@ -232,86 +298,54 @@ def register_alerts_source(spark) -> None:
       and a dataset mutating mid-scan can skip or duplicate rows exactly
       as a serial re-walk would. When in doubt, use ``token``.
     - ``token``: strict-token fallback — ONE input partition that walks
-      the ``nextPageToken`` chain serially via the same logic as
-      ``fetch_all_pages``. Correct against any conforming API, but
-      throughput is bounded by the chain walk (the reference's ceiling).
+      the ``nextPageToken`` chain serially via ``fetch_all_pages``.
+      Correct against any conforming API, but throughput is bounded by
+      the chain walk (the reference's ceiling).
 
     Optional ``username``/``password``/``prisma_id`` options enable
     executor-side 401 re-login mid-scan (long scans outlive tokens).
 
     ``rate_limit`` (float requests/sec, default off) bounds the
     AGGREGATE page-request rate across the whole scan — the reference's
-    1 page/s contract (P:268) generalized. Per-request backoff alone
-    cannot do this: 32 partitions would legally hammer the API at 32×
-    the intended rate until 429s throttle them. The planner stamps page
-    i with an absolute not-before time ``t0 + i/rate_limit``; executors
-    sleep until their stamp, so requests start at most ``rate_limit``
-    per second in aggregate no matter how many run concurrently (on a
-    multi-node cluster this leans on NTP-level clock sync; skew adds
-    jitter, never sustained overshoot — and an executor that wakes past
-    its slot fires immediately, so a scheduling stall can release a
-    short catch-up burst, exactly like a token bucket that accrued
-    capacity while idle; the whole-scan average never exceeds the
-    limit). Serial ``token`` mode paces the
-    chain walk at ``1/rate_limit`` between pages; a bodied (no
-    ``probe_key``) fanout planning walk is paced the same way since it
-    transfers full pages.
+    1 page/s contract (P:268) generalized; per-request backoff alone
+    would let 32 partitions hit the API at 32× the rate until 429s
+    throttle them. The planner stamps page i with an absolute not-before
+    time ``t0 + i/rate_limit`` and executors sleep until their stamp. A
+    late executor fires at once, so a stall can release a short catch-up
+    burst (token-bucket semantics), but the whole-scan average never
+    exceeds the limit; across nodes this leans on NTP-level clock sync.
+    Every serial walk (``token`` mode, the indexed fallback, a bodied
+    fanout planning walk — it transfers full pages) starts pages
+    ``1/rate_limit`` apart.
     """
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     class _Page(InputPartition):
-        def __init__(self, index: int, token: str | None = None,
-                     not_before: float = 0.0):
-            self.index = index
+        """Every mode's partition: one page request (its ``pageToken``,
+        None for the first page) or, with ``walk``, the serial chain."""
+        def __init__(self, token: str | None = None, not_before: float = 0.0,
+                     walk: bool = False):
             self.token = token
             self.not_before = not_before  # absolute epoch; 0 = unpaced
+            self.walk = walk
 
-    class _AlertsReader(DataSourceReader):
-        def __init__(self, options):
-            self.base_url = options["base_url"]
-            self.token = options.get("token", "")
-            self.path = options.get("path", "/v2/alerts")
-            self.page_size = int(options.get("page_size", "100"))
-            self.backoff = float(options.get("backoff_factor", "1.0"))
-            self.filters = json.loads(options.get("filters", "{}"))
-            self.paging = options.get("paging", "indexed")
-            self.probe_key = options.get("probe_key", "")
-            self.max_pages = int(options.get("max_pages", "10000"))
-            self.username = options.get("username", "")
-            self.password = options.get("password", "")
-            self.prisma_id = options.get("prisma_id", "")
-            self.rate_limit = float(options.get("rate_limit", "0"))
-            if self.paging not in ("indexed", "token", "token-fanout"):
-                raise ValueError("paging must be indexed|token|token-fanout,"
-                                 f" got {self.paging!r}")
-
-        def _client(self) -> RestClient:
-            return RestClient(self.base_url, backoff_factor=self.backoff,
-                              token=self.token, username=self.username,
-                              password=self.password, prisma_id=self.prisma_id)
-
+    class _AlertsReader(_AlertsOptions, DataSourceReader):
         def _walk_cursors(self) -> list:
             """Driver-side token-chain walk: returns the page cursors
             [None, tok1, tok2, ...]. With ``probe_key`` set the server
             skips bodies (cursor-only probe); otherwise bodies download
             once here and are discarded — executors re-fetch in read()."""
-            client = self._client()
             probe = {self.probe_key: True} if self.probe_key else {}
             # a bodied walk (no probe_key) transfers full pages, so it
             # spends from the same aggregate request budget; cursor-only
             # probes are advertised-cheap and stay unpaced
-            pace = (1.0 / self.rate_limit
-                    if self.rate_limit > 0 and not self.probe_key else 0.0)
-            cursors, token = [], None
-            for i in range(self.max_pages):
+            pace = 0.0 if self.probe_key else self.interval
+            cursors = []
+            for token, body in itertools.islice(
+                    _chain(self._client(), self.path, dict(self.filters, **probe),
+                           self.page_size, pace), self.max_pages):
                 cursors.append(token)
-                if pace and i:
-                    time.sleep(pace)
-                body = dict(self.filters, limit=self.page_size, **probe,
-                            **({"pageToken": token} if token else {}))
-                resp = client.post_json(self.path, body)
-                token = resp.body.get("nextPageToken")
-                if not token:
+                if not body.get("nextPageToken"):
                     return cursors
             raise RuntimeError(f"cursor walk exceeded max_pages={self.max_pages}")
 
@@ -329,22 +363,14 @@ def register_alerts_source(spark) -> None:
                     return False
                 raise
 
-        def _paced(self, pages: list) -> list:
-            """Stamp planned pages with absolute not-before times spaced
-            1/rate_limit apart: aggregate request starts never exceed
-            rate_limit/sec regardless of executor concurrency."""
-            if self.rate_limit > 0:
-                t0 = time.time()
-                for i, p in enumerate(pages):
-                    p.not_before = t0 + i / self.rate_limit
-            return pages
+        def _paced(self, tokens: list) -> list:
+            """One partition per page token, not-before stamps spaced
+            1/rate_limit apart whatever the executor concurrency."""
+            t0 = time.time() if self.interval else 0.0
+            return [_Page(tok, t0 + i * self.interval)
+                    for i, tok in enumerate(tokens)]
 
         def partitions(self):
-            if self.paging == "token":
-                # opaque server tokens, no parallel plan requested: pages
-                # are only discoverable by walking the chain -> a single
-                # serial partition
-                return [_Page(-1)]
             if self.paging == "token-fanout":
                 # opaque tokens, parallel plan: enumerate cursors on the
                 # driver, then one partition per discovered cursor.
@@ -358,40 +384,41 @@ def register_alerts_source(spark) -> None:
                 # because a partial scan cannot be resumed without
                 # duplicating rows.
                 cursors = self._walk_cursors()
-                if len(cursors) > 1 and not self._cursor_reusable(cursors[1]):
-                    return [_Page(-1)]
-                return self._paced([_Page(i, tok)
-                                    for i, tok in enumerate(cursors)])
-            # indexed mode: one cheap page-0 probe learns the total; one
-            # partition per page -> executors fetch in parallel (vs the
-            # reference's serial 1 page/s driver loop)
-            resp = self._client().post_json(
-                self.path, dict(self.filters, limit=1))
-            total = int(resp.headers.get("X-Total-Count", "0"))
-            n = max(1, math.ceil(total / self.page_size))
-            return self._paced([_Page(i) for i in range(n)])
+                if len(cursors) == 1 or self._cursor_reusable(cursors[1]):
+                    return self._paced(cursors)
+            elif self.paging == "indexed":
+                # one cheap page-0 probe learns the total; one partition
+                # per page -> executors fetch in parallel (vs the
+                # reference's serial 1 page/s driver loop). No total ->
+                # the pages are only discoverable by walking the chain.
+                resp = self._client().post_json(
+                    self.path, dict(self.filters, limit=1))
+                total = _total_count(resp.headers)
+                if total is not None:
+                    n = max(1, math.ceil(total / self.page_size))
+                    return self._paced(
+                        [None] + [f"page-{i}" for i in range(1, n)])
+            # opaque server tokens, no parallel plan possible or
+            # requested: a single serial partition walks the chain
+            return [_Page(walk=True)]
 
         def read(self, partition):
-            if partition.index < 0:  # token mode: serial chain walk
-                pace = 1.0 / self.rate_limit if self.rate_limit > 0 else 0.0
-                for item in fetch_all_pages(self._client(), self.path,
-                                            dict(self.filters),
-                                            page_size=self.page_size,
-                                            min_interval=pace):
-                    yield _alert_row(item)
-                return
-            if partition.not_before:
-                time.sleep(max(0.0, partition.not_before - time.time()))
-            if partition.token is not None:  # token-fanout: by cursor
-                tok = {"pageToken": partition.token}
-            else:  # indexed page i, or fanout's first page (no cursor)
-                tok = ({"pageToken": f"page-{partition.index}"}
-                       if self.paging == "indexed" and partition.index else {})
-            body = dict(self.filters, limit=self.page_size, **tok)
+            if partition.walk:
+                items = fetch_all_pages(self._client(), self.path,
+                                        self.filters, page_size=self.page_size,
+                                        min_interval=self.interval)
+            else:
+                items = self._fetch(partition)
+            for item in items:
+                yield _alert_row(item)
+
+        def _fetch(self, page) -> list:
+            time.sleep(max(0.0, page.not_before - time.time()))
             try:
-                resp = self._client().post_json(self.path, body)
+                return self._items(page.token)
             except urllib.error.HTTPError as e:
-                if partition.token is not None and 400 <= e.code < 500:
+                if (self.paging == "token-fanout" and page.token
+                        and 400 <= e.code < 500):
                     # token-fanout assumption broken: the cursor the
                     # planner discovered no longer resolves (single-use /
                     # expired token, or the dataset mutated mid-scan)
@@ -402,8 +429,6 @@ def register_alerts_source(spark) -> None:
                         "with .option('paging', 'token') for the serial "
                         "single-walk mode") from e
                 raise
-            for item in resp.body.get("items", []):
-                yield _alert_row(item)
 
     class PrismaAlertsDataSource(DataSource):
         @classmethod
@@ -443,34 +468,17 @@ def register_alerts_stream_source(spark) -> None:
         SimpleDataSourceStreamReader,
     )
 
-    class _AlertsStreamReader(SimpleDataSourceStreamReader):
+    class _AlertsStreamReader(_AlertsOptions, SimpleDataSourceStreamReader):
         def __init__(self, options):
-            self.base_url = options["base_url"]
-            self.token = options.get("token", "")
-            self.path = options.get("path", "/v2/alerts")
-            self.page_size = int(options.get("page_size", "100"))
-            self.backoff = float(options.get("backoff_factor", "1.0"))
-            self.filters = json.loads(options.get("filters", "{}"))
+            super().__init__(options)
             # same contract as the batch connector's rate_limit: the
             # drain loop is serial, so pacing is a simple minimum
             # inter-request interval (the reference's 1 page/s, P:268)
-            self.rate_limit = float(options.get("rate_limit", "0"))
-            self._next_ok = 0.0
-
-        def _client(self) -> RestClient:
-            return RestClient(self.base_url, backoff_factor=self.backoff,
-                              token=self.token)
+            self._pacer = _Pacer(self.interval)
 
         def _fetch(self, page: int) -> list:
-            if self.rate_limit > 0:
-                now = time.time()
-                if now < self._next_ok:
-                    time.sleep(self._next_ok - now)
-                self._next_ok = max(now, self._next_ok) + 1.0 / self.rate_limit
-            body = dict(self.filters, limit=self.page_size,
-                        **({"pageToken": f"page-{page}"} if page else {}))
-            resp = self._client().post_json(self.path, body)
-            return resp.body.get("items", [])
+            self._pacer.wait()
+            return self._items(f"page-{page}" if page else None)
 
         def initialOffset(self):
             return {"page": 0}
