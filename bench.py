@@ -51,8 +51,8 @@ HEADLINE = (
     "op-merge-upsert",    # latest-wins CDC compaction (WindowGroupLimit)
     "dedup-exact",        # hash groupBy over documents
     "dedup-ngram-jaccard",# inverted-index jaccard
-    "dedup-minhash-lsh",  # banded LSH + verify
-    "dedup-simhash-pairs",# simhash banding
+    "dedup-minhash-md5",  # banded LSH + verify
+    "dedup-simhash-md5-pairs",  # simhash banding
     "dedup-embedding-lsh",# hyperplane-LSH near-dup (the scale path; the
                           # exact-blocked quadratic twin stays un-benched
                           # as a verification baseline only)
@@ -127,8 +127,7 @@ SCALING_SF01 = {
     # was stale, not host noise (it sat 1.83x from the flag line)
     "asof-join": 0.83, "op-range-join": 0.47, "op-time-rollup": 0.70,
     "op-gap-fill": 0.52, "op-merge-upsert": 0.37, "dedup-exact": 0.21,
-    "dedup-ngram-jaccard": 2.78, "dedup-minhash-lsh": 1.53,
-    "dedup-simhash-pairs": 3.25, "dedup-embedding-lsh": 2.11,
+    "dedup-ngram-jaccard": 2.78, "dedup-embedding-lsh": 2.11,
     "sim-bruteforce-topk": 0.46, "sim-lsh-topk": 1.07, "sim-ivf-topk": 1.73,
     "text-quality": 1.04, "text-tfidf-top-terms": 1.43,
     "op-sessionize": 0.44, "stream-window-agg": 1.00,

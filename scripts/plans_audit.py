@@ -19,7 +19,7 @@ AUDIT = (
     ("top-k-per-group", "rank limit pushed below the shuffle (WindowGroupLimit)"),
     ("asof-join", "union + forward-fill window; NO join node, one shuffle"),
     ("dedup-ngram-jaccard", "hot-set broadcast anti-join; corpus joins stat-driven"),
-    ("dedup-minhash-lsh", "single posexplode band self-join over cached signatures"),
+    ("dedup-minhash-md5", "single posexplode band self-join over cached signatures"),
     ("sim-bruteforce-topk", "queries broadcast; candidate side unshuffled until top-k"),
     ("op-salted-join", "salted keys split hot partitions; small side replicated"),
     ("tpch-q6", "all five predicates pushed to the scan; 4-column pruned read"),

@@ -31,8 +31,8 @@ WARM = "/root/testdata/sf0.001"
 KEYS = (
     "dedup-exact",
     "dedup-ngram-jaccard",
-    "dedup-minhash-lsh",
-    "dedup-simhash-pairs",
+    "dedup-minhash-md5",
+    "dedup-simhash-md5-pairs",
     "text-quality",
     "text-token-count",
     "text-bigram-counts",

@@ -1,6 +1,7 @@
-"""Dedup-family tests: hand-computed Jaccard, LSH-subset/recall
-invariants (the CORRECTNESS gate can't cover the xxhash64-seeded ops —
-these tests are their verification, per catalog.py)."""
+"""Dedup-family tests: hand-computed Jaccard and the LSH invariants an
+oracle diff does not state — verified pairs are a subset of the exact
+result, exact dups always collide, and results do not depend on
+partitioning."""
 
 from __future__ import annotations
 
@@ -68,7 +69,7 @@ def test_minhash_lsh_subset_of_exact_with_full_recall_on_dups(spark, docs):
              for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5,
                                                 max_df=10**9).collect()}
     lsh = {(r.doc_a, r.doc_b)
-           for r in dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()}
+           for r in dedup.minhash_lsh_pairs_md5(docs, threshold=0.5).collect()}
     assert lsh <= exact                      # verified candidates only
     assert (1, 3) in lsh                     # exact dup always collides
     assert (1, 2) in lsh                     # 8/10 shingles shared
@@ -76,23 +77,40 @@ def test_minhash_lsh_subset_of_exact_with_full_recall_on_dups(spark, docs):
 
 def test_minhash_jaccard_is_exact_on_candidates(spark, docs):
     got = {(r.doc_a, r.doc_b): r.jaccard_r
-           for r in dedup.minhash_lsh_pairs(docs, threshold=0.1).collect()}
+           for r in dedup.minhash_lsh_pairs_md5(docs, threshold=0.1).collect()}
     for (a, b), j in got.items():
         want = _exact_jaccard(DOCS[a - 1][1], DOCS[b - 1][1])
         assert j == pytest.approx(round(want, 4)), (a, b)
 
 
 def test_simhash_stability_and_dup_collision(spark, docs):
-    sig = {r.doc_id: r.simhash for r in dedup.simhash_64(docs).collect()}
+    sig = {r.doc_id: (r.sim_hi, r.sim_lo)
+           for r in dedup.simhash_md5(docs).collect()}
     assert sig[1] == sig[3]                  # identical text -> identical sig
     assert len(sig) == 5
 
 
 def test_simhash_pairs_hamming_bound(spark, docs):
-    got = dedup.simhash_pairs(docs, max_hamming=3).collect()
+    got = dedup.simhash_md5_pairs(docs, max_hamming=3).collect()
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in got}
     assert pairs[(1, 3)] == 0                # exact dups at distance 0
     assert all(h <= 3 for h in pairs.values())
+
+
+def test_bands_must_divide_num_hashes(spark, docs):
+    # bands > num_hashes would leave every band key "" (every pair a
+    # candidate), and a non-divisor would drop the trailing hashes
+    builders = (
+        lambda b: dedup.lsh_inventory(docs, source_col=None, num_hashes=8,
+                                      bands=b),
+        lambda b: dedup.minhash_lsh_pairs_md5(docs, num_hashes=8, bands=b),
+        lambda b: dedup.incremental_minhash_pairs_from_inventory(
+            docs, docs, num_hashes=8, bands=b),
+    )
+    for build in builders:
+        for bad in (16, 0, 3):
+            with pytest.raises(ValueError, match="num_hashes=8"):
+                build(bad)
 
 
 def test_embedding_near_dup_blocked(spark):
@@ -143,9 +161,8 @@ def test_hot_shingle_cap_keeps_pairs_lower_bound(spark):
 
 
 def test_md5_twins_find_planted_duplicates(spark):
-    """The oracle-verifiable md5 variants find the same planted near-dup
-    as the xxhash throughput variants (hash choice changes candidate
-    randomness, not what a true duplicate looks like)."""
+    """The md5-hashed MinHash and SimHash pipelines find a planted
+    near-dup and nothing else on unrelated text."""
     from tf_prisma_api_data_ingestion_spark.operators import dedup as D
     rows = [(1, "the quick brown fox jumps over the lazy dog again and again"),
             (2, "the quick brown fox jumps over the lazy dog again and again"),
@@ -232,8 +249,8 @@ def test_results_are_partition_invariant(spark):
 
     d = tables.load(spark, "/root/testdata/sf0.001", "documents")
     for op in (lambda x: dedup.ngram_jaccard_pairs(x, max_df=None),
-               dedup.minhash_lsh_pairs,
-               dedup.simhash_pairs):
+               dedup.minhash_lsh_pairs_md5,
+               dedup.simhash_md5_pairs):
         wide = {tuple(r) for r in op(d.repartition(16)).collect()}
         narrow = {tuple(r) for r in op(d.coalesce(1)).collect()}
         assert wide == narrow and wide

@@ -29,12 +29,12 @@ def test_ngram_jaccard_empty(spark, empty_docs):
 
 
 def test_minhash_empty(spark, empty_docs):
-    assert dedup.minhash_lsh_pairs(empty_docs).count() == 0
+    assert dedup.minhash_lsh_pairs_md5(empty_docs).count() == 0
 
 
 def test_simhash_empty(spark, empty_docs):
-    assert dedup.simhash_64(empty_docs).count() == 0
-    assert dedup.simhash_pairs(empty_docs).count() == 0
+    assert dedup.simhash_md5(empty_docs).count() == 0
+    assert dedup.simhash_md5_pairs(empty_docs).count() == 0
 
 
 def test_clusters_empty(spark, empty_docs):

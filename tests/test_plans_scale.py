@@ -117,7 +117,7 @@ def test_groupby_has_mapside_partial_agg(spark):
     assert -1 < i_exch < i_partial  # partial agg is BELOW the exchange
 
 
-@pytest.mark.parametrize("name", ["dedup-minhash-lsh", "dedup-simhash-pairs"])
+@pytest.mark.parametrize("name", ["dedup-minhash-md5", "dedup-simhash-md5-pairs"])
 def test_lsh_families_single_band_join(spark, name):
     plan = plan_of(spark, name)
     # posexplode banding: exactly one candidate self-join keyed on the

@@ -31,6 +31,13 @@ def test_throughput_twins_do_not_shadow_gated_keys():
     assert not overlap, f"keys in both registries: {overlap}"
 
 
+def test_every_benched_headliner_is_oracle_gated():
+    # a benched key outside ORACLES would time code nothing verifies
+    import bench
+    ungated = [k for k in bench.HEADLINE if k not in ORACLES]
+    assert not ungated, f"benched keys without an oracle: {ungated}"
+
+
 def test_oracle_sql_is_nonempty_ansi_text():
     for k, sql in ORACLES.items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), k

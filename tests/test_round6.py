@@ -194,11 +194,9 @@ def test_lsh_near_dup_auto_dial_matches_explicit(spark):
         rows[i + 1] = (i + 1, [v + 0.01 for v in rows[i][1]])
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     a = set(map(tuple, lsh_near_dup_pairs(
-        df, threshold=0.9, dim=8, planes_per_table=None, tables=4,
-        mode="md5").collect()))
+        df, threshold=0.9, dim=8, planes_per_table=None, tables=4).collect()))
     b = set(map(tuple, lsh_near_dup_pairs(
-        df, threshold=0.9, dim=8, planes_per_table=8, tables=4,
-        mode="md5").collect()))
+        df, threshold=0.9, dim=8, planes_per_table=8, tables=4).collect()))
     assert a == b
     assert len(a) >= 10                  # the planted dups survive
 

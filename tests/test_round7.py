@@ -173,10 +173,10 @@ def test_minhash_auto_matches_explicit_banding(spark):
 
     d = tables.load(spark, "/root/testdata/sf0.001", "documents")
     auto = {(r.doc_a, r.doc_b) for r in
-            dedup.minhash_lsh_pairs(d, threshold=0.2).collect()}
+            dedup.minhash_lsh_pairs_md5(d, threshold=0.2).collect()}
     explicit = {(r.doc_a, r.doc_b) for r in
-                dedup.minhash_lsh_pairs(d, bands=32,
-                                        threshold=0.2).collect()}
+                dedup.minhash_lsh_pairs_md5(d, bands=32,
+                                            threshold=0.2).collect()}
     assert auto == explicit and auto
     exact = {(r.doc_a, r.doc_b) for r in
              dedup.ngram_jaccard_pairs(d, threshold=0.2,

@@ -1,6 +1,6 @@
 """Similarity-search tests: brute force against a numpy oracle; LSH
-recall/subset invariants (sim-lsh-topk has no SQL oracle — this is its
-verification)."""
+recall/subset invariants, which sim-lsh-topk's SQL oracle (a replay of
+the same buckets) does not state."""
 
 from __future__ import annotations
 

@@ -89,11 +89,11 @@ def test_sample_quantile_deterministic(spark):
 
 
 def test_every_throughput_query_runs(spark):
-    # the xx/HLL/GK twins live outside the oracle gate; pin that each runs
-    # and emits a sane row count at the smoke sf
+    # the PQ/HLL/GK/unigram-EM queries live outside the oracle gate; pin
+    # that each runs and emits rows at the smoke sf
     for name, fn in THROUGHPUT_QUERIES.items():
         n = fn(spark, "/root/testdata/sf0.001").count()
-        assert n >= 0, name
+        assert n > 0, name
 
 
 def test_kmv_union_estimate_accuracy(spark):

@@ -508,8 +508,8 @@ SELECT query_id, vec_id, round(cos, 4) AS cos_r FROM ranked WHERE rn <= 5
 
 def _sql_md5_buckets(tables: int, planes: int, dim: int = 64,
                      src: str = "embeddings") -> str:
-    """Shared DuckDB CTE chain reproducing ``similarity.bucket_table``
-    in mode='md5': integer hyperplane components from the 60-bit md5
+    """Shared DuckDB CTE chain reproducing ``similarity.bucket_table``:
+    integer hyperplane components from the 60-bit md5
     primitive, floor-quantized vectors, exact-integer sign decisions,
     bit-packed (vec_id, t, b) bucket rows. ``src`` may be an earlier CTE
     (vec_id, embedding) — the multimodal composition uses that to bucket

@@ -3945,6 +3945,7 @@ ORACLES: dict[str, str] = {
     # r14: GPT-2 pre-tokenizer + its byte-level encode composition
     "op-gpt2-pretok": _sql_op_gpt2_pretok(),
     "op-bpe-encode-gpt2": _sql_op_bpe_encode_gpt2_registered(),
-    # Every QUERIES key has an oracle: non-SQL-expressible variants
-    # (xxhash64 LSH, HLL, GK) live in THROUGHPUT_QUERIES + tests instead.
+    # Every QUERIES key has an oracle: non-SQL-expressible queries
+    # (PQ codebooks, HLL, GK, unigram EM) live in THROUGHPUT_QUERIES +
+    # tests instead.
 }

@@ -654,26 +654,6 @@ def q_dedup_incremental(spark, sf_dir):
     return dedup.incremental_jaccard_pairs(new, idx, n=3, threshold=0.2)
 
 
-def q_dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH banded candidates verified with exact Jaccard. Depends
-    on Spark's xxhash64 — no SQL oracle (rows-only check); the pytest suite
-    asserts LSH pairs are a subset of the exact-Jaccard pairs."""
-    return dedup.minhash_lsh_pairs(_t(spark, sf_dir, "documents"),
-                                   n=3, num_hashes=64, bands="auto",
-                                   threshold=0.2)
-
-
-def q_dedup_simhash(spark, sf_dir):
-    """64-bit SimHash signatures (xxhash64-based — rows-only check)."""
-    return dedup.simhash_64(_t(spark, sf_dir, "documents"))
-
-
-def q_dedup_simhash_pairs(spark, sf_dir):
-    """SimHash Hamming<=3 near-dup pairs via 16-bit pigeonhole bands
-    (xxhash64-based — rows-only check; subset property unit-tested)."""
-    return dedup.simhash_pairs(_t(spark, sf_dir, "documents"), max_hamming=3)
-
-
 def q_dedup_embedding(spark, sf_dir):
     """Embedding near-dup pairs, blocked on the label column (the coarse-
     quantizer stand-in): exact cosine within blocks, threshold 0.35.
@@ -722,26 +702,24 @@ def q_sim_bruteforce_topk(spark, sf_dir):
 
 def q_dedup_embedding_lsh(spark, sf_dir):
     """Unblocked embedding near-dup via random-hyperplane LSH blocking +
-    exact cosine verification — the quadratic-free scale path. mode='md5'
-    derives integer hyperplanes from the cross-engine md5 primitive so
-    bucketing AND verification replay bit-exact in DuckDB (the xxhash64
-    throughput twin lives in THROUGHPUT_QUERIES['dedup-embedding-lsh-xx'];
-    identical plan shape: one posexplode-free bucket self-join)."""
+    exact cosine verification — the quadratic-free scale path. Integer
+    hyperplanes from the cross-engine md5 primitive make bucketing AND
+    verification replay bit-exact in DuckDB (one posexplode-free bucket
+    self-join)."""
     from .operators.similarity import lsh_near_dup_pairs
     return lsh_near_dup_pairs(_t(spark, sf_dir, "embeddings"),
-                              threshold=0.35, dim=64, mode="md5")
+                              threshold=0.35, dim=64)
 
 
 def q_sim_lsh_topk(spark, sf_dir):
-    """Sign-bucket LSH approximate top-k, mode='md5': candidates must
-    share a hyperplane sign-bucket with the query in ≥1 of 4 tables, then
-    exact cosine re-rank. Integer md5 hyperplanes make the bucket sets —
-    and therefore the approximate result — fully DuckDB-reproducible;
-    recall vs brute force is additionally unit-tested. (xxhash64
-    throughput twin: THROUGHPUT_QUERIES['sim-lsh-topk-xx'].)"""
+    """Sign-bucket LSH approximate top-k: candidates must share a
+    hyperplane sign-bucket with the query in ≥1 of 4 tables, then exact
+    cosine re-rank. Integer md5 hyperplanes make the bucket sets — and
+    therefore the approximate result — fully DuckDB-reproducible; recall
+    vs brute force is additionally unit-tested."""
     e = _t(spark, sf_dir, "embeddings")
     return similarity.lsh_bucket_topk(e.filter(F.col("vec_id") < 5), e, k=5,
-                                      dim=64, mode="md5")
+                                      dim=64)
 
 
 def q_sim_multiprobe_topk(spark, sf_dir):
@@ -749,31 +727,13 @@ def q_sim_multiprobe_topk(spark, sf_dir):
     lsh_multiprobe_topk — Lv et al. VLDB'07): every query probes its own
     bucket plus each Hamming-distance-1 bucket in every table, buying
     the recall of more hash tables for (planes+1)x cheap bucket lookups
-    instead of another corpus pass. Same md5 dial as sim-lsh-topk
+    instead of another corpus pass. Same dial as sim-lsh-topk
     (4 tables x 8 planes) so the candidate-set uplift is directly
     comparable; the oracle generates the identical probe set with an
     xor over range(planes+1)."""
     from .operators.similarity import lsh_multiprobe_topk
     e = _t(spark, sf_dir, "embeddings")
-    return lsh_multiprobe_topk(e.filter(F.col("vec_id") < 5), e, k=5,
-                               mode="md5")
-
-
-def q_dedup_embedding_lsh_xx(spark, sf_dir):
-    """xxhash64 throughput twin of dedup-embedding-lsh (no md5 per
-    component; same banding shape). Not oracle-expressible — benched and
-    invariant-tested instead."""
-    from .operators.similarity import lsh_near_dup_pairs
-    return lsh_near_dup_pairs(_t(spark, sf_dir, "embeddings"),
-                              threshold=0.35, dim=64)
-
-
-def q_sim_lsh_topk_xx(spark, sf_dir):
-    """xxhash64 throughput twin of sim-lsh-topk (recall vs brute force
-    unit-tested; not oracle-expressible)."""
-    e = _t(spark, sf_dir, "embeddings")
-    return similarity.lsh_bucket_topk(e.filter(F.col("vec_id") < 5), e, k=5,
-                                      dim=64)
+    return lsh_multiprobe_topk(e.filter(F.col("vec_id") < 5), e, k=5)
 
 
 # =====================================================================
@@ -2186,13 +2146,12 @@ def q_op_zorder_layout(spark, sf_dir):
 
 
 def q_dedup_minhash_md5(spark, sf_dir):
-    """Fully-oracle-verified MinHash+LSH: the md5-seeded twin of
-    dedup-minhash-lsh (operators/dedup.py minhash_lsh_pairs_md5). DuckDB
-    replays the ENTIRE pipeline — shingles, 64 seeded 60-bit md5 minima,
+    """Fully-oracle-verified MinHash+LSH (operators/dedup.py
+    minhash_lsh_pairs_md5). DuckDB replays the ENTIRE pipeline —
+    shingles, 64 universal-hash minima over 60-bit md5 shingle hashes,
     the auto_bands band keys, candidate self-join, exact-jaccard
-    verification — and hash-compares the result, closing the gap that
-    xxhash64-based LSH (no DuckDB analog) can only rows-check. Banding
-    is the r7 S-curve dial (bands="auto" -> 32x2 at threshold 0.2); the
+    verification — and hash-compares the result. Banding is the r7
+    S-curve dial (bands="auto" -> 32x2 at threshold 0.2); the
     oracle derives its band width from the SAME function below, so the
     dial can never silently diverge between engines."""
     return dedup.minhash_lsh_pairs_md5(_t(spark, sf_dir, "documents"),

@@ -44,16 +44,12 @@ from .catalog_queries import (  # noqa: F401
     q_dedup_clusters_star,
     q_dedup_embedding,
     q_dedup_embedding_lsh,
-    q_dedup_embedding_lsh_xx,
     q_dedup_exact,
     q_dedup_incremental,
-    q_dedup_minhash_lsh,
     q_dedup_minhash_md5,
     q_dedup_ngram_jaccard,
-    q_dedup_simhash,
     q_dedup_simhash_md5,
     q_dedup_simhash_md5_pairs,
-    q_dedup_simhash_pairs,
     q_multimodal_decode,
     q_multimodal_frame_sample,
     q_op_apply_in_pandas,
@@ -122,7 +118,6 @@ from .catalog_queries import (  # noqa: F401
     q_sim_bruteforce_topk,
     q_sim_ivf_topk,
     q_sim_lsh_topk,
-    q_sim_lsh_topk_xx,
     q_sim_multiprobe_topk,
     q_sink_csv,
     q_sink_partition,
@@ -644,7 +639,7 @@ def q_plan_multimodal_dedup(spark, sf_dir):
     """End-to-end multimodal dedup composition: binary payload ->
     Arrow-batched feature extraction (multimodal.fake_embed, the encoder
     shape) -> hyperplane-LSH near-dup pairs (similarity.
-    lsh_near_dup_pairs, mode='md5') — image dedup by embedding, with the
+    lsh_near_dup_pairs) — image dedup by embedding, with the
     codec as the single stubbed step. md5-slice pseudo-embeddings carry
     no semantics (byte-identical payloads map to cos 1.0, everything
     else to the random-vector distribution), so the demo threshold
@@ -687,7 +682,7 @@ def q_plan_multimodal_dedup(spark, sf_dir):
     # cos=0.9 demo boundary is ~0.5, rising above 0.99 for the
     # near-exact pairs (cos>=0.99) the dedup actually targets.
     return lsh_near_dup_pairs(arr, threshold=0.9, dim=8,
-                              planes_per_table=None, tables=8, mode="md5")
+                              planes_per_table=None, tables=8)
 
 
 def q_op_string_agg(spark, sf_dir):
@@ -1613,9 +1608,9 @@ def q_sim_lsh_recall(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 5)
     bf = similarity.brute_force_topk(q, e, k=5) \
         .select("query_id", "vec_id")
-    lsh = similarity.lsh_bucket_topk(q, e, k=5, dim=64, mode="md5") \
+    lsh = similarity.lsh_bucket_topk(q, e, k=5, dim=64) \
         .select("query_id", "vec_id")
-    mp = similarity.lsh_multiprobe_topk(q, e, k=5, dim=64, mode="md5") \
+    mp = similarity.lsh_multiprobe_topk(q, e, k=5, dim=64) \
         .select("query_id", "vec_id")
     hits = bf.join(lsh, ["query_id", "vec_id"]) \
              .groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
@@ -3236,16 +3231,16 @@ QUERIES = {k: QUERIES[k] for k in _R15_WINDOW} | {
     k: v for k, v in QUERIES.items() if k not in set(_R15_WINDOW)}
 
 
-# Throughput variants with no ANSI-SQL-expressible oracle (xxhash64 /
-# HLL / GK internals). NOT part of the driver gate: benched by bench.py
-# under their family names and pinned by invariant tests instead; each
-# has an oracle-checked md5/KMV/sample twin in QUERIES.
+# Throughput queries with no ANSI-SQL-expressible oracle (float k-means
+# codebooks, HLL / GK internals, float EM M-steps). NOT part of the
+# oracle gate: pinned by invariant tests instead; the sketches have an
+# oracle-checked KMV/sample twin in QUERIES.
 def q_sim_pq_topk(spark, sf_dir):
     """Product-quantization ANN (operators/similarity.py pq_topk): ADC
     over an m=16-codes-per-vector compressed corpus, exact re-rank of the
     per-query shortlist. Float k-means codebook means have no bit-stable
-    SQL replay, so this lives beside the xxhash64 twins: benched here,
-    recall/determinism pinned in tests/test_similarity.py."""
+    SQL replay, so this lives outside the oracle gate: recall and
+    determinism are pinned in tests/test_similarity.py."""
     e = _t(spark, sf_dir, "embeddings")
     return similarity.pq_topk(e.filter(F.col("vec_id") < 5), e, k=5)
 
@@ -3268,12 +3263,7 @@ def q_plan_unigram_train(spark, sf_dir):
 
 
 THROUGHPUT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup-minhash-lsh": q_dedup_minhash_lsh,
     "sim-pq-topk": q_sim_pq_topk,
-    "dedup-simhash": q_dedup_simhash,
-    "dedup-simhash-pairs": q_dedup_simhash_pairs,
-    "dedup-embedding-lsh-xx": q_dedup_embedding_lsh_xx,
-    "sim-lsh-topk-xx": q_sim_lsh_topk_xx,
     "sketch-hll-distinct": q_sketch_hll_distinct,
     "sketch-gk-quantile": q_sketch_quantile_gk,
     "plan-unigram-train": q_plan_unigram_train,

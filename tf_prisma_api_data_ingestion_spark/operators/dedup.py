@@ -9,12 +9,13 @@ Scale design notes (the point of this module):
   self-join on shingle, count co-occurrences) instead of an O(n^2) cross
   join; hot shingles are capped by document frequency so no single key
   explodes the shuffle (the classic skew guard).
-- MinHash+LSH banding turns near-dup search into equality joins on band
-  keys — each band is a shuffle on a 64-bit key; candidate pairs are then
-  verified with true Jaccard. Signatures are computed with ``xxhash64``
-  under ``transform``/``array_min`` — all JVM-side, no UDFs.
-- SimHash does one explode + groupBy to fold token hashes into a 64-bit
-  signature, then pigeonhole-bands 16-bit chunks for Hamming<=k search.
+- MinHash+LSH banding turns near-dup search into one equality join on
+  (band index, band key); candidate pairs are then verified with true
+  Jaccard. Signatures use the universal-hash family over md5-derived
+  shingle hashes under ``transform``/``array_min`` — all JVM-side, no
+  UDFs, and every value replayable in the DuckDB oracle.
+- SimHash folds md5 token hashes into a 64-bit signature (two 32-bit
+  halves), then pigeonhole-bands 16-bit chunks for Hamming<=k search.
 """
 
 from __future__ import annotations
@@ -90,8 +91,8 @@ def _pair_jaccard(shingled: DataFrame, max_df: int | None, id_col: str) -> DataF
     # join on the 64-bit shingle hash, not the string: an 8-byte shuffle key
     # instead of a ~50-byte one. xxhash64 collisions would merge two distinct
     # shingles (inflating _inter by at most 1); negligible below ~2^32
-    # distinct shingles — at larger corpora re-verify survivors exactly as
-    # minhash_lsh_pairs does.
+    # distinct shingles — at larger corpora re-verify survivors exactly
+    # over the string shingle sets, as minhash_lsh_pairs_md5 does.
     # persist (MEMORY_AND_DISK) the raw index: 24 B per shingle occurrence
     # — corpus-scale but flat, disk-backed when large. It feeds the
     # df-count pass AND (via the anti-join) both sides of the self-join,
@@ -207,8 +208,7 @@ def prefix_filter_jaccard_pairs(df: DataFrame, text_col: str = "text",
     ``hashed=True`` (r7) runs the identical algorithm over xxhash64
     longs instead of shingle strings — same pair set modulo 64-bit hash
     collisions (negligible; any collision would fail the paired
-    exhaustive oracle) at ~6x fewer shuffle/verify bytes, the same
-    trade ``minhash_lsh_pairs`` makes vs its md5 twin. The audits'
+    exhaustive oracle) at ~6x fewer shuffle/verify bytes. The audits'
     truth sides use it; the oracle-exact string form stays the default
     (its own catalog key differential-checks jaccard_r values). The
     r7 SSJoin size filter also applies in both forms: J >= t implies
@@ -428,30 +428,6 @@ def incremental_jaccard_pairs_from_inventory(
 
 # -------------------------------------------------------------- minhash ---
 
-def minhash_signature(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed i, min over shingles of xxhash64(s, i).
-
-    Entirely JVM-side: transform + array_min per permutation; the standard
-    (a*x+b mod p) permutation family is replaced by seeded xxhash64, which
-    is an equally valid min-wise family in practice.
-
-    Callers on the hot path should pass a column of PRE-HASHED longs read
-    from a materialized (persisted) relation — seeding over 8-byte longs
-    beats re-hashing full strings per permutation, but ONLY when the
-    hashed array is materialized: deriving it inline re-evaluates the
-    string hashing once per permutation (Catalyst inlines captured
-    expressions into each transform).
-    """
-    # ONE nested-transform expression (seed is the outer lambda variable)
-    # instead of num_hashes separately-built array_min trees: identical
-    # values, ~30% faster end-to-end on the documents corpus — big inline
-    # expression forests cost real evaluation/codegen time (same lesson as
-    # similarity.bucket_table).
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, i))))
-
-
 def auto_bands(num_hashes: int, threshold: float) -> int:
     """S-curve-derived LSH banding: the number of bands b (with r =
     num_hashes/b rows each) whose collision crossover t* = (1/b)^(1/r)
@@ -490,145 +466,19 @@ def auto_bands(num_hashes: int, threshold: float) -> int:
 
 def _resolve_bands(bands: int | str, num_hashes: int,
                    threshold: float) -> int:
+    """The band count every MinHash entry point uses: ``"auto"`` through
+    ``auto_bands``, else an explicit int that must divide ``num_hashes``
+    — a non-divisor would silently drop the trailing hashes (the
+    oracles' ``i // r`` grouping keeps them), and ``bands >
+    num_hashes`` would make every band key empty, so every doc pair a
+    candidate."""
     if bands == "auto":
         return auto_bands(num_hashes, threshold)
-    return int(bands)
-
-
-def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                      n: int = 3, num_hashes: int = 64,
-                      bands: int | str = "auto",
-                      threshold: float = 0.2) -> DataFrame:
-    """MinHash+LSH near-dup candidates, verified with exact Jaccard.
-
-    b bands x r rows over ``num_hashes`` -> collision prob ~ s^r per
-    band; candidates are pairs agreeing on >=1 full band. The default
-    ``bands="auto"`` derives b from the threshold via the S-curve
-    (``auto_bands`` above — r7, replacing the hand-set 16x4 whose
-    t*=0.5 crossover sat far above a 0.2 threshold); pass an int to pin
-    it. Each band induces one equality-join shuffle on (band_idx,
-    band_hash) — the scalable path at 100 TB where exact all-pairs is
-    impossible. Output is a subset of the exact result (candidates
-    only), each verified exactly.
-    """
-    bands = _resolve_bands(bands, num_hashes, threshold)
-    rows_per_band = num_hashes // bands
-    df = fan_out(df)  # 64-permutation signatures are CPU-bound
-    # _hashed: the shingle SET as 8-byte longs, materialized ONCE — the 64
-    # signature permutations seed over longs instead of re-hashing full
-    # strings per permutation, and the exact-Jaccard verify intersects the
-    # same long arrays (identical jaccard modulo xxhash64 collisions,
-    # negligible below ~2^32 distinct shingles; ~6x fewer shuffle/cache
-    # bytes than keeping the string shingles — measured 7.7s -> 4.8s on
-    # the sf0.1 corpus). The string form never leaves the first projection.
-    shingled = df.select(
-        F.col(id_col).alias("_id"),
-        F.array_distinct(F.transform(word_shingles(F.col(text_col), n),
-                                     lambda s: F.xxhash64(s))).alias("_hashed"))
-    # persist (MEMORY_AND_DISK): the shingle index is the job's working
-    # set — sized like the tokenized corpus, disk-backed when it does not
-    # fit. It feeds the signature pass AND both verify joins; without it
-    # the shingling + 64 hash passes would run three times over the full
-    # corpus. At cluster scale, writing it to a staging parquet gives the
-    # same reuse with cheaper recovery.
-    shingled = tracked_persist(shingled)
-    sig = shingled.withColumn("_sig", minhash_signature(F.col("_hashed"), num_hashes))
-    # one transform over band indices (vs `bands` inlined concat trees);
-    # same band hash values: concat_ws over the sliced signature chunk
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            F.concat_ws(",", F.transform(
-                F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
-                lambda x: x.cast("string"))), b))
-    # ONE (band_idx, band_hash) posexplode + ONE self-join replaces the
-    # 16-way union-of-joins: a single shuffle keyed on (idx, hash), and the
-    # signature pipeline runs once per side instead of once per band.
-    # persist: the two join sides project different aliases out of this
-    # relation, so their exchanges don't canonicalize equal and
-    # ReuseExchange can NOT dedup them — without the barrier the whole
-    # signature pipeline runs twice (n x bands slim rows; cheap to cache)
-    banded = tracked_persist(
-        sig.select("_id", F.posexplode(band_arr).alias("_bidx", "_bh")))
-    l = banded.select(F.col("_id").alias("doc_a"), "_bidx", "_bh")
-    r = banded.select(F.col("_id").alias("doc_b"), "_bidx", "_bh")
-    cand = (l.join(r, ["_bidx", "_bh"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .select("doc_a", "doc_b")
-             .distinct())
-    # verify candidates with exact jaccard via the hashed shingle sets
-    sa = shingled.select(F.col("_id").alias("doc_a"), F.col("_hashed").alias("_sa"))
-    sb = shingled.select(F.col("_id").alias("doc_b"), F.col("_hashed").alias("_sb"))
-    verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn("jaccard", F.col("_inter") /
-                    (F.size("_sa") + F.size("_sb") - F.col("_inter"))))
-    return (verified.filter(F.col("jaccard") >= threshold)
-                    .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard_r")))
-
-
-# --------------------------------------------------------------- simhash ---
-
-def simhash_64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-               out: str = "simhash") -> DataFrame:
-    """64-bit SimHash per document from token xxhash64 values.
-
-    One explode + groupBy(doc): per bit b, sum(+1/-1 by bit of token hash);
-    signature bit b = (sum > 0). The 64 per-bit sums are 64 conditional
-    aggregates in a single aggregation pass (map-side partial agg applies).
-    """
-    tok = (fan_out(df)
-             .select(F.col(id_col), F.explode(normalized_tokens(F.col(text_col))).alias("_t"))
-             .withColumn("_h", F.xxhash64("_t")))
-    bit_sums = [
-        F.sum(F.when(F.shiftright(F.col("_h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"_b{b}")
-        for b in range(64)
-    ]
-    agg = tok.groupBy(id_col).agg(*bit_sums)
-    sig = None
-    for b in range(64):
-        term = F.when(F.col(f"_b{b}") > 0, F.lit(1).cast("long") * (2 ** b if b < 63 else -(2 ** 63))).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
-    return agg.select(F.col(id_col), sig.alias(out))
-
-
-def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                  max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance <= k, found via
-    pigeonhole banding: split 64 bits into 4 16-bit chunks; any pair with
-    distance <= 3 agrees exactly on >=1 chunk -> equality join per chunk.
-    """
-    # persist: signatures are 2 longs per doc; recomputing simhash_64 (an
-    # explode + 64-agg pass over the corpus) per self-join side would
-    # dominate the job.
-    sigs = tracked_persist(simhash_64(df, text_col, id_col))
-
-    def band_mask(c: int) -> int:
-        # 16-bit band mask as a *signed* 64-bit constant: Python's
-        # 0xFFFF << 48 exceeds signed int64, so wrap to two's complement
-        # (Column has no << operator; precompute masks driver-side).
-        m = 0xFFFF << (16 * c)
-        return m - (1 << 64) if m >= (1 << 63) else m
-
-    # ONE (chunk_idx, chunk_value) posexplode + ONE self-join replaces the
-    # 4-way union-of-joins (pigeonhole: hamming<=3 over 4 chunks implies
-    # equality on >=1 chunk).
-    chunk_arr = F.array(*[F.col("simhash").bitwiseAND(F.lit(band_mask(c)))
-                          for c in range(4)])
-    banded = sigs.select(F.col(id_col).alias("_id"), F.col("simhash"),
-                         F.posexplode(chunk_arr).alias("_cidx", "_ck"))
-    l = banded.select(F.col("_id").alias("doc_a"), F.col("simhash").alias("_sa"),
-                      "_cidx", "_ck")
-    r = banded.select(F.col("_id").alias("doc_b"), F.col("simhash").alias("_sb"),
-                      "_cidx", "_ck")
-    cand = (l.join(r, ["_cidx", "_ck"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .select("doc_a", "doc_b", "_sa", "_sb")
-             .distinct())
-    dist = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-    return (cand.withColumn("hamming", dist)
-                .filter(F.col("hamming") <= max_hamming)
-                .select("doc_a", "doc_b", "hamming"))
+    b = int(bands)
+    if b < 1 or num_hashes % b:
+        raise ValueError(f"bands={bands!r} must be a divisor of "
+                         f"num_hashes={num_hashes} in 1..{num_hashes}")
+    return b
 
 
 # ------------------------------------------------------------- clusters ---
@@ -932,7 +782,7 @@ def embedding_near_dup_pairs(df: DataFrame, vec_col: str = "embedding",
     return pairs.select("vec_a", "vec_b", F.round("cos", 4).alias("cos_r"))
 
 
-# ------------------------------------------------- md5 (oracle) twins ---
+# ------------------------------------ md5-hashed minhash + simhash ---
 
 def md5_hash60(col: Column) -> Column:
     """Cross-engine 60-bit hash: first 15 hex chars of md5 as a long.
@@ -965,79 +815,6 @@ def minhash_uh_seeds(num_hashes: int) -> list[tuple[int, int]]:
     return seeds
 
 
-def minhash_lsh_pairs_md5(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", n: int = 3,
-                          num_hashes: int = 64, bands: int | str = "auto",
-                          threshold: float = 0.2) -> DataFrame:
-    """Oracle-verifiable twin of ``minhash_lsh_pairs``: the identical
-    shingle -> signature -> band -> candidate -> exact-jaccard-verify
-    pipeline, but with seeded 60-bit md5 minhashing and plain string band
-    keys so EVERY intermediate value is reproducible in ANSI SQL (DuckDB
-    differential-checks the full result, not just row counts).
-
-    ``bands="auto"`` resolves through the same ``auto_bands`` S-curve as
-    the throughput twin; num_hashes stays fixed, so the seeded
-    signatures replay unchanged in SQL and only the band grouping width
-    (``i // r``) follows the dial.
-
-    The xxhash64 variant stays the throughput path; the algorithmic
-    shape (single posexplode band self-join, exact verification) is
-    byte-for-byte the same.
-
-    r9: the per-seed rehash is the PUBLISHED universal-hash MinHash
-    family (Broder 1997; Carter & Wegman 1979): each shingle hashes
-    ONCE to a 60-bit md5 value reduced mod p = 2^31 - 1, and seed i's
-    permutation is h_i(x) = (a_i * x + b_i) mod p with the (a_i, b_i)
-    literals from ``minhash_uh_seeds``. Replaces the earlier
-    md5-per-(shingle, seed) construction: the signature hot loop is
-    now one int64 multiply-add-mod inside whole-stage codegen instead
-    of an md5 over a fresh string — same 6.4B-element loop at 500k
-    docs, ~100x cheaper per element — while staying bit-replayable in
-    ANSI SQL (all intermediates < 2^62, no overflow in either engine).
-    Recall vs the exact-Jaccard truth is re-measured at every decade
-    by dedup-minhash-recall (1.0 throughout, see SCALING.md).
-    """
-    bands = _resolve_bands(bands, num_hashes, threshold)
-    rpb = num_hashes // bands
-    seeds = minhash_uh_seeds(num_hashes)
-    shingled = fan_out(df).select(F.col(id_col).alias("_id"),
-                                  word_shingles(F.col(text_col), n).alias("shingles"))
-    # hash shingles to md5_hash60 mod p ONCE; every seed then permutes
-    # these small longs arithmetically
-    shingled = tracked_persist(shingled.withColumn(
-        "_mh", F.transform("shingles",
-                           lambda s: md5_hash60(s) % _UH_PRIME)))
-    sig = shingled.withColumn("_sig", F.transform(
-        F.array(*[F.array(F.lit(a), F.lit(b)) for a, b in seeds]),
-        lambda ab: F.array_min(F.transform(
-            F.col("_mh"),
-            lambda x: (ab[0] * x + ab[1]) % _UH_PRIME))))
-    band_arr = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat_ws(",", F.transform(
-            F.slice(F.col("_sig"), b * rpb + 1, rpb),
-            lambda x: x.cast("string"))))
-    # persist: same ReuseExchange caveat as minhash_lsh_pairs — the two
-    # aliased sides would otherwise re-run the md5 signature pipeline
-    banded = tracked_persist(
-        sig.select("_id", F.posexplode(band_arr).alias("_bidx", "_bk")))
-    l = banded.select(F.col("_id").alias("doc_a"), "_bidx", "_bk")
-    r = banded.select(F.col("_id").alias("doc_b"), "_bidx", "_bk")
-    cand = (l.join(r, ["_bidx", "_bk"])
-             .filter(F.col("doc_a") < F.col("doc_b"))
-             .select("doc_a", "doc_b")
-             .distinct())
-    sa = shingled.select(F.col("_id").alias("doc_a"), F.col("shingles").alias("_sa"))
-    sb = shingled.select(F.col("_id").alias("doc_b"), F.col("shingles").alias("_sb"))
-    verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
-        .withColumn("jaccard", F.col("_inter") /
-                    (F.size("_sa") + F.size("_sb") - F.col("_inter"))))
-    return (verified.filter(F.col("jaccard") >= threshold)
-                    .select("doc_a", "doc_b",
-                            F.round("jaccard", 4).alias("jaccard_r")))
-
-
 def _lsh_doc_frame(df: DataFrame, text_col: str, id_col: str, n: int,
                    num_hashes: int, bands: int,
                    source_col: str | None = None) -> DataFrame:
@@ -1045,8 +822,9 @@ def _lsh_doc_frame(df: DataFrame, text_col: str, id_col: str, n: int,
     family: (doc_id[, source], shingles, band_keys) — the string
     shingle set (the exact-verify basis the whole minhash-md5 family
     shares) and the ``bands`` banded signature keys (band index =
-    array position). Shared head of ``lsh_inventory`` and the
-    incremental pair pipeline's batch side."""
+    array position). The one signature builder: ``minhash_lsh_pairs_md5``,
+    ``lsh_inventory`` and the incremental pair pipeline's batch side
+    all read it."""
     rpb = num_hashes // bands
     seeds = minhash_uh_seeds(num_hashes)
     keep = ([F.col(source_col).alias("source")]
@@ -1057,10 +835,8 @@ def _lsh_doc_frame(df: DataFrame, text_col: str, id_col: str, n: int,
     # barrier BEFORE the 64-seed signature transform: without it
     # CollapseProject inlines the md5 hashing (and the shingle regex
     # behind it) into EVERY seed's lambda — 64 re-evaluations per row
-    # (the minhash_signature docstring's trap; measured 461s vs ~7s
-    # for a 5k-doc inventory build). minhash_lsh_pairs_md5 pays a
-    # tracked_persist here for the same reason; the lazy
-    # localCheckpoint is the write-path-friendly equivalent.
+    # (measured 461s vs ~7s for a 5k-doc inventory build). The lazy
+    # localCheckpoint is the write-path-friendly form of a persist.
     base = base.withColumn(
         "_mh", F.transform("shingles",
                            lambda s: md5_hash60(s) % _UH_PRIME)) \
@@ -1085,6 +861,64 @@ def _lsh_doc_frame(df: DataFrame, text_col: str, id_col: str, n: int,
     keep_names = ["source"] if source_col is not None else []
     return base.select("doc_id", *keep_names, "shingles",
                        band_arr.alias("band_keys"))
+
+
+def minhash_lsh_pairs_md5(df: DataFrame, text_col: str = "text",
+                          id_col: str = "doc_id", n: int = 3,
+                          num_hashes: int = 64, bands: int | str = "auto",
+                          threshold: float = 0.2) -> DataFrame:
+    """MinHash+LSH near-dup pairs verified with exact Jaccard: shingle
+    -> signature -> band -> candidate -> exact-jaccard-verify, with
+    universal-hash minima over 60-bit md5 shingle hashes and plain
+    string band keys (both built by ``_lsh_doc_frame``) so EVERY
+    intermediate value is reproducible in ANSI SQL (DuckDB
+    differential-checks the full result, not just row counts).
+
+    b bands x r rows over ``num_hashes`` -> collision prob ~ s^r per
+    band; candidates are pairs agreeing on >= 1 full band. The default
+    ``bands="auto"`` derives b from the threshold via the ``auto_bands``
+    S-curve; num_hashes stays fixed, so the seeded signatures replay
+    unchanged in SQL and only the band grouping width (``i // r``)
+    follows the dial. ONE (band_idx, band_key) posexplode + ONE
+    self-join: a single shuffle keyed on (idx, key) — the scalable path
+    where exact all-pairs is impossible. Output is a subset of the
+    exact result (candidates only), each verified exactly.
+
+    The per-seed rehash is the PUBLISHED universal-hash MinHash
+    family (Broder 1997; Carter & Wegman 1979): each shingle hashes
+    ONCE to a 60-bit md5 value reduced mod p = 2^31 - 1, and seed i's
+    permutation is h_i(x) = (a_i * x + b_i) mod p with the (a_i, b_i)
+    literals from ``minhash_uh_seeds``: the signature hot loop is one
+    int64 multiply-add-mod inside whole-stage codegen, and every
+    intermediate stays < 2^62 (no overflow in either engine).
+    Recall vs the exact-Jaccard truth is re-measured at every decade
+    by dedup-minhash-recall (1.0 throughout, see SCALING.md).
+    """
+    bands = _resolve_bands(bands, num_hashes, threshold)
+    # the doc frame feeds both sides of the band self-join AND both
+    # verify joins. The sides project different aliases, so their
+    # exchanges don't canonicalize equal and ReuseExchange can NOT dedup
+    # them: the frame's own checkpoints are what keep the shingle and
+    # signature work to one pass — each consumer re-runs only the cheap
+    # band-key slice
+    docs = _lsh_doc_frame(df, text_col, id_col, n, num_hashes, bands)
+    banded = docs.select("doc_id",
+                         F.posexplode("band_keys").alias("_bidx", "_bk"))
+    l = banded.select(F.col("doc_id").alias("doc_a"), "_bidx", "_bk")
+    r = banded.select(F.col("doc_id").alias("doc_b"), "_bidx", "_bk")
+    cand = (l.join(r, ["_bidx", "_bk"])
+             .filter(F.col("doc_a") < F.col("doc_b"))
+             .select("doc_a", "doc_b")
+             .distinct())
+    sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("_sa"))
+    sb = docs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("_sb"))
+    verified = (cand.join(sa, "doc_a").join(sb, "doc_b")
+        .withColumn("_inter", F.size(F.array_intersect("_sa", "_sb")))
+        .withColumn("jaccard", F.col("_inter") /
+                    (F.size("_sa") + F.size("_sb") - F.col("_inter"))))
+    return (verified.filter(F.col("jaccard") >= threshold)
+                    .select("doc_a", "doc_b",
+                            F.round("jaccard", 4).alias("jaccard_r")))
 
 
 def lsh_inventory(df: DataFrame, text_col: str = "text",
@@ -1171,15 +1005,14 @@ def incremental_minhash_pairs_from_inventory(
 
 def simhash_md5(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id") -> DataFrame:
-    """Oracle-verifiable twin of ``simhash_64``: the 64-bit signature is
-    derived from each token's md5 (bit b = bit b of the first 16 hex
-    chars) and returned as two 32-bit halves (sim_hi, sim_lo) so all
-    arithmetic stays inside signed int64 in both engines — no unsigned
-    casts, no overflow, bit-identical in DuckDB.
+    """64-bit SimHash per document: the signature is derived from each
+    token's md5 (bit b = bit b of the first 16 hex chars) and returned
+    as two 32-bit halves (sim_hi, sim_lo) so all arithmetic stays inside
+    signed int64 in both engines — no unsigned casts, no overflow,
+    bit-identical in DuckDB.
 
     Shape: explode (token, bit) -> per-(doc, bit) ±1 sums -> pack halves.
-    Two hash shuffles, rows = tokens x 64 — heavier than simhash_64's
-    single 64-aggregate pass (the throughput path), but every value is
+    Two hash shuffles, rows = tokens x 64; every value is
     ANSI-SQL-reproducible.
     """
     tok = (fan_out(df)
@@ -1206,8 +1039,9 @@ def simhash_md5_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id",
                       max_hamming: int = 3) -> DataFrame:
     """Pigeonhole-banded Hamming<=k pairs over the md5 simhash halves:
-    4 x 16-bit chunks, equality join on any chunk, exact bit_count verify
-    — same banding shape as ``simhash_pairs``, fully SQL-reproducible.
+    4 x 16-bit chunks (pigeonhole: hamming<=3 over 4 chunks implies
+    equality on >=1 chunk), ONE (chunk_idx, chunk) posexplode + ONE
+    equality self-join, exact bit_count verify — fully SQL-reproducible.
     """
     sigs = tracked_persist(simhash_md5(df, text_col, id_col))
     chunk_arr = F.array(
@@ -1337,7 +1171,7 @@ def passage_provenance(df: DataFrame, text_col: str = "text",
     bounds both the per-hash fanout and the count products. The
     (hash, source, nd) frame is localCheckpointed before the
     self-join — the aliased-sides recompute trap
-    (minhash_lsh_pairs_md5's persist note above).
+    (minhash_lsh_pairs_md5's note above).
 
     Returns (source_a, source_b, n_shared_passages, dup_doc_pairs).
     """

@@ -10,8 +10,10 @@ north-star extensions (SURVEY.md §7.5).
   any of ``tables`` independent hash tables (equality joins on bucket
   keys), then scored exactly. Recall < 1, cost ~ bucket sizes instead of N.
 
-Hyperplanes are derived deterministically from a seed via xxhash64 over
-(table, plane, dim) — reproducible across runs without shipping matrices.
+Hyperplanes are derived deterministically from the 60-bit md5 of
+(table, plane, dim) as integer components — reproducible across runs
+without shipping matrices, and replayable bit-exactly in the DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -47,49 +49,31 @@ def brute_force_topk(queries: DataFrame, candidates: DataFrame, k: int = 10,
     return top.select("query_id", id_col, F.round("cos", 4).alias("cos_r"))
 
 
-def hyperplane(table: int, plane: int, dim: int) -> Column:
-    """Deterministic pseudo-random hyperplane as a JVM-side expression:
-    component d = xxhash64(table, plane, d) folded into [-1, 1].
-
-    Computed inside the executors from three integers — no literal weight
-    matrices in the plan (an earlier numpy-literal version put 64 literals
-    per plane into codegen, dominating compile time) and nothing to ship
-    to a cluster: the seed IS the function.
-    """
-    idx = F.sequence(F.lit(0), F.lit(dim - 1))
-    return F.transform(
-        idx, lambda d: ((F.xxhash64(F.lit(table), F.lit(plane), d) % 2001
-                         + 2001) % 2001).cast("double") / 1000.0 - 1.0)
-
-
 def hyperplanes_df(df: DataFrame, tables: int, planes_per_table: int,
-                   dim: int, mode: str = "xx") -> DataFrame:
+                   dim: int) -> DataFrame:
     """All (table, plane) hyperplanes as a tiny broadcast-able DataFrame:
-    (_tbl, _p, _hv vec, _bitval). Components match ``hyperplane``
-    exactly (same xxhash64 fold), but materialized ONCE as tables×planes
+    (_tbl, _p, _hv vec, _bitval), materialized ONCE as tables×planes
     rows instead of being inlined tables×planes times into one giant
     per-row expression — which dominated runtime: 64 nested
     aggregate-of-zip_with trees took ~7 s for 2 000 rows (measured at
-    sf0.1), vs <1 s for the join formulation.
+    sf0.1), vs <1 s for the join formulation. Computed inside the
+    executors from three integers: no literal weight matrices in the
+    plan and nothing to ship to a cluster — the seed IS the function.
 
-    ``mode="md5"`` derives INTEGER components in [-1000, 1000] from the
-    cross-engine 60-bit md5 primitive (``dedup.md5_hash60``) so the
-    bucketing is reproducible in ANSI SQL — with integer dot products the
-    sign decision is exact arithmetic, immune to float association order.
-    DuckDB twin of a component:
+    Components are INTEGERS in [-1000, 1000] from the cross-engine
+    60-bit md5 primitive (``dedup.md5_hash60``) so the bucketing is
+    reproducible in ANSI SQL — with integer dot products the sign
+    decision is exact arithmetic, immune to float association order.
+    DuckDB form of a component:
     ``(('0x'||substr(md5('hp,'||t||','||p||','||d),1,15))::BIGINT % 2001) - 1000``.
     """
     from .dedup import md5_hash60
 
     n = tables * planes_per_table
     idx = F.sequence(F.lit(0), F.lit(dim - 1))
-    if mode == "md5":
-        comp = lambda d: (md5_hash60(  # noqa: E731
-            F.concat_ws(",", F.lit("hp"), F.col("_tbl"), F.col("_p"),
-                        d.cast("string"))) % 2001 - 1000)
-    else:
-        comp = lambda d: ((F.xxhash64(F.col("_tbl"), F.col("_p"), d)  # noqa: E731
-                           % 2001 + 2001) % 2001).cast("double") / 1000.0 - 1.0
+    comp = lambda d: (md5_hash60(  # noqa: E731
+        F.concat_ws(",", F.lit("hp"), F.col("_tbl"), F.col("_p"),
+                    d.cast("string"))) % 2001 - 1000)
     return (df.sparkSession.range(n)
             .select((F.col("id") / planes_per_table).cast("int").alias("_tbl"),
                     (F.col("id") % planes_per_table).cast("int").alias("_p"))
@@ -99,7 +83,7 @@ def hyperplanes_df(df: DataFrame, tables: int, planes_per_table: int,
 
 
 def quantized_vec(vec: Column) -> Column:
-    """floor(v * 10000) as long per component — the md5-mode vector form.
+    """floor(v * 10000) as long per component — the bucketing vector form.
     floor (unlike round) is bit-identical across Spark and DuckDB, and
     integer dot products make every sign decision exact."""
     return F.transform(vec, lambda x: F.floor(x.cast("double") * 10000.0)
@@ -107,8 +91,7 @@ def quantized_vec(vec: Column) -> Column:
 
 
 def bucket_table(df: DataFrame, id_col: str, vec_col: str, tables: int,
-                 planes_per_table: int, dim: int,
-                 mode: str = "xx") -> DataFrame:
+                 planes_per_table: int, dim: int) -> DataFrame:
     """Per-vector sign buckets as rows: (id, _tbl, _bkt).
 
     One broadcast cross join against the nc=tables×planes hyperplane
@@ -117,14 +100,12 @@ def bucket_table(df: DataFrame, id_col: str, vec_col: str, tables: int,
     vectors×tables tiny rows; replaces the expression-tree blow-up of
     evaluating every plane inline per row.
 
-    ``mode="md5"``: integer hyperplanes × floor-quantized vectors — the
-    oracle-verifiable twin (sign decisions are exact int64 arithmetic,
-    reproducible in DuckDB); ``"xx"`` is the xxhash64 throughput path.
+    Integer hyperplanes × floor-quantized vectors: every sign decision
+    is exact int64 arithmetic, reproducible in DuckDB.
     """
-    hp = hyperplanes_df(df, tables, planes_per_table, dim, mode=mode)
-    vd = (quantized_vec(F.col(vec_col)) if mode == "md5"
-          else as_double_vec(F.col(vec_col)))
-    v = fan_out(df).select(F.col(id_col), vd.alias("_v"))
+    hp = hyperplanes_df(df, tables, planes_per_table, dim)
+    v = fan_out(df).select(F.col(id_col),
+                           quantized_vec(F.col(vec_col)).alias("_v"))
     scored = (v.crossJoin(F.broadcast(hp))
                .select(id_col, "_tbl",
                        F.when(dot(F.col("_v"), F.col("_hv")) >= 0,
@@ -132,21 +113,6 @@ def bucket_table(df: DataFrame, id_col: str, vec_col: str, tables: int,
                         .alias("_bit")))
     return (scored.groupBy(id_col, "_tbl")
                   .agg(F.sum("_bit").alias("_bkt")))
-
-
-def signbits(vec: Column, table: int, planes_per_table: int, dim: int) -> Column:
-    """Bucket id = sign bits of the vector against each of the table's
-    hyperplanes. Inline-expression form — kept for parity checks; the
-    hot paths use ``bucket_table`` (same values, join formulation)."""
-    out = None
-    for p_idx in range(planes_per_table):
-        dot = F.aggregate(
-            F.zip_with(vec, hyperplane(table, p_idx, dim),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        term = F.when(dot >= 0, F.lit(1 << p_idx)).otherwise(F.lit(0))
-        out = term if out is None else out + term
-    return out
 
 
 def auto_planes(n: int, target_bucket_population: int = 2,
@@ -172,7 +138,7 @@ def auto_planes(n: int, target_bucket_population: int = 2,
 def lsh_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
                        vec_col: str = "embedding", threshold: float = 0.9,
                        dim: int = 64, planes_per_table: int | None = 8,
-                       tables: int = 8, mode: str = "xx") -> DataFrame:
+                       tables: int = 8) -> DataFrame:
     """Embedding near-dup pairs WITHOUT a block column: random-hyperplane
     LSH blocking + exact cosine verification — the scale path that
     replaces the all-pairs cross join (which is quadratic and only
@@ -190,16 +156,15 @@ def lsh_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
     and the choice replays exactly in the DuckDB oracle (mask the
     32-plane bucket to the same count derived from COUNT(*)).
 
-    One posexplode (table_idx, bucket) self-join — same single-shuffle
-    shape as minhash_lsh_pairs.
+    One (table_idx, bucket) self-join — same single-shuffle shape as
+    dedup.minhash_lsh_pairs_md5.
     """
     if planes_per_table is None:
         planes_per_table = auto_planes(df.count())
     vd = as_double_vec(F.col(vec_col))
     v = df.select(F.col(id_col).alias("_id"), vd.alias("_v"),
                   norm2(vd).alias("_n"))
-    bk = (bucket_table(df, id_col, vec_col, tables, planes_per_table, dim,
-                       mode=mode)
+    bk = (bucket_table(df, id_col, vec_col, tables, planes_per_table, dim)
           .withColumnRenamed(id_col, "_id"))
     base = tracked_persist(bk.join(v, "_id"))
     a = base.select(F.col("_id").alias("vec_a"), F.col("_v").alias("_va"),
@@ -218,7 +183,7 @@ def lsh_near_dup_pairs(df: DataFrame, id_col: str = "vec_id",
 def lsh_bucket_topk(queries: DataFrame, candidates: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
                     dim: int = 64, planes_per_table: int = 8,
-                    tables: int = 4, mode: str = "xx") -> DataFrame:
+                    tables: int = 4) -> DataFrame:
     """Approximate top-k: candidates must share a sign-bucket with the
     query in at least one hash table; exact cosine re-rank inside.
 
@@ -230,14 +195,13 @@ def lsh_bucket_topk(queries: DataFrame, candidates: DataFrame, k: int = 10,
     # the candidate corpus instead of once per table (bucket_table's join
     # formulation — the inline-expression version dominated runtime).
     vd = as_double_vec(F.col(vec_col))
-    q = (bucket_table(queries, id_col, vec_col, tables, planes_per_table, dim,
-                      mode=mode)
+    q = (bucket_table(queries, id_col, vec_col, tables, planes_per_table, dim)
          .withColumnRenamed(id_col, "query_id")
          .join(queries.select(F.col(id_col).alias("query_id"),
                               vd.alias("_qv"), norm2(vd).alias("_qn")),
                "query_id"))
     c = (bucket_table(candidates, id_col, vec_col, tables, planes_per_table,
-                      dim, mode=mode)
+                      dim)
          .join(candidates.select(F.col(id_col), vd.alias("_cv"),
                                  norm2(vd).alias("_cn")), id_col))
     cand = (c.join(F.broadcast(q), ["_tbl", "_bkt"])
@@ -506,8 +470,8 @@ def pq_topk(queries: DataFrame, candidates: DataFrame, k: int = 10,
 
     Returns (query_id, vec_id, cos_r) like ``brute_force_topk``.
     Recall/determinism pinned by tests; no SQL oracle (float k-means
-    means have no bit-stable SQL replay) — rows-only, like the xxhash64
-    LSH twins.
+    means have no bit-stable SQL replay) — benched as a throughput
+    query.
     """
     # one persisted subvector frame shared by the codebook training and
     # the corpus encode (guide §2.4/§5: each re-derivation was a full
@@ -554,8 +518,8 @@ def pq_topk(queries: DataFrame, candidates: DataFrame, k: int = 10,
 def lsh_multiprobe_topk(queries: DataFrame, candidates: DataFrame,
                         k: int = 10, id_col: str = "vec_id",
                         vec_col: str = "embedding", dim: int = 64,
-                        planes_per_table: int = 8, tables: int = 4,
-                        mode: str = "xx") -> DataFrame:
+                        planes_per_table: int = 8,
+                        tables: int = 4) -> DataFrame:
     """Multi-probe LSH top-k (Lv et al., VLDB'07): each query probes its
     own sign bucket PLUS every bucket at Hamming distance 1 (one plane's
     sign flipped) in every table — (planes+1) x tables probes instead of
@@ -571,7 +535,7 @@ def lsh_multiprobe_topk(queries: DataFrame, candidates: DataFrame,
     """
     vd = as_double_vec(F.col(vec_col))
     qb = (bucket_table(queries, id_col, vec_col, tables, planes_per_table,
-                       dim, mode=mode)
+                       dim)
           .withColumnRenamed(id_col, "query_id"))
     probes = F.array(F.col("_bkt"),
                      *[F.col("_bkt").bitwiseXOR(F.lit(1 << p))
@@ -581,7 +545,7 @@ def lsh_multiprobe_topk(queries: DataFrame, candidates: DataFrame,
                                 vd.alias("_qv"), norm2(vd).alias("_qn")),
                  "query_id"))
     c = (bucket_table(candidates, id_col, vec_col, tables, planes_per_table,
-                      dim, mode=mode)
+                      dim)
          .join(candidates.select(F.col(id_col), vd.alias("_cv"),
                                  norm2(vd).alias("_cn")), id_col))
     cand = (c.join(F.broadcast(q), ["_tbl", "_bkt"])
