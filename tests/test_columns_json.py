@@ -15,6 +15,7 @@ from tf_prisma_api_data_ingestion_spark.functions.columns import (
 from tf_prisma_api_data_ingestion_spark.operators.json_ops import (
     array_first,
     flatten_array_of_structs,
+    json_rows,
     parse_json_col,
     select_json_fields,
 )
@@ -108,3 +109,24 @@ def test_variant_type_drift_is_null_not_crash(spark):
     got = {r.id: r.k for r in
            v.select("id", variant_field("v", "$.k", "int").alias("k")).collect()}
     assert got == {1: 7, 2: None, 3: None}
+
+
+def test_json_rows_empty_keeps_declared_schema(spark):
+    df = json_rows(spark, [], "a INT, b STRING")
+    assert df.schema.simpleString() == "struct<a:int,b:string>"
+    assert df.count() == 0
+
+
+def test_json_rows_missing_keys_and_nulls_are_null(spark):
+    got = json_rows(spark, [{"a": 1}, {"a": None, "b": None}, {}],
+                    "a INT, b ARRAY<STRING>").collect()
+    assert [(r.a, r.b) for r in got] == [(1, None), (None, None), (None, None)]
+
+
+def test_json_rows_nested_arrays_round_trip(spark):
+    rows = [{"ok": True, "n": 2**62, "tags": ["x", "y"],
+             "aggs": [{"s": "ec2", "c": 3, "g": ["a"]}, {"s": "s3", "c": 1, "g": []}]},
+            {"ok": False, "n": 0, "tags": [], "aggs": []}]
+    df = json_rows(spark, rows, "ok BOOLEAN, n LONG, tags ARRAY<STRING>, "
+                                "aggs ARRAY<STRUCT<s STRING, c INT, g ARRAY<STRING>>>")
+    assert [r.asDict(recursive=True) for r in df.collect()] == rows

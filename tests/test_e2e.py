@@ -10,8 +10,20 @@ from datetime import date
 import pytest
 from pyspark.sql import functions as F
 
-from tf_prisma_api_data_ingestion_spark.plans.e2e import full_report_run
+from tf_prisma_api_data_ingestion_spark.plans.e2e import (
+    alert_report_frame,
+    full_report_run,
+    inventory_frame,
+)
 from tf_prisma_api_data_ingestion_spark.sources import mock_api
+from tf_prisma_api_data_ingestion_spark.sources.rest import RestClient
+
+# /v1/inventory bodies whose groupedAggregates break INVENTORY_SCHEMA
+MISTYPED_AGGREGATES = [
+    [{"serviceName": "Amazon EC2", "failedResources": "12"}],
+    [{"serviceName": "Amazon EC2", "failedResources": 1.5}],
+    {"serviceName": "Amazon EC2", "failedResources": 12},
+]
 
 
 def test_full_report_run_publishes_three_csvs(spark, tmp_path):
@@ -89,3 +101,42 @@ def test_full_report_run_bad_credentials_publishes_nothing(spark, tmp_path):
         full_report_run(spark, mock_api.mock_server_url(),
                         "wrong", "creds", out, date(2024, 2, 2))
     assert not os.path.exists(os.path.join(out, "_manifests"))
+
+
+def test_report_path_has_no_python_rdd_leaf(spark, capsys):
+    """The inventory body and the policy rows are JVM-local relations: no
+    plan on the report path reads a pickled Python RDD (``Scan
+    ExistingRDD``), so no Python-worker pool starts to unpickle them."""
+    client = RestClient(mock_api.mock_server_url(), username=mock_api.MOCK_USER,
+                        password=mock_api.MOCK_PASSWORD).login()
+    inventory_frame(spark, mock_api.INVENTORY_FIXTURE).explain()
+    alert_report_frame(spark, client).explain()
+    plans = capsys.readouterr().out
+    assert plans.count("Physical Plan") == 2, plans
+    assert "ExistingRDD" not in plans, plans
+
+
+@pytest.mark.parametrize("aggregates", MISTYPED_AGGREGATES)
+def test_mistyped_inventory_body_is_rejected(spark, aggregates):
+    body = {**mock_api.INVENTORY_FIXTURE, "groupedAggregates": aggregates}
+    df = inventory_frame(spark, body)  # lazy: nothing parsed yet
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        df.collect()
+
+
+def test_full_report_run_mistyped_inventory_publishes_nothing(
+        spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(mock_api, "INVENTORY_FIXTURE",
+                        {**mock_api.INVENTORY_FIXTURE,
+                         "groupedAggregates": MISTYPED_AGGREGATES[0]})
+    out = str(tmp_path)
+    with pytest.raises(Exception, match="MALFORMED_RECORD") as err:
+        full_report_run(spark, mock_api.mock_server_url(),
+                        mock_api.MOCK_USER, mock_api.MOCK_PASSWORD,
+                        out, date(2024, 2, 4))
+    # the rejection surfaces at the run's first write, inside the
+    # transaction, which rolls the staging back
+    assert any(entry.name == "stage" for entry in err.traceback)
+    assert not os.path.exists(os.path.join(out, "_manifests"))
+    assert not os.path.exists(os.path.join(out, "year=2024"))
+    assert not os.path.exists(os.path.join(out, "_staging", "report-2024-02-04"))

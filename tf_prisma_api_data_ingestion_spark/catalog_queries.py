@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from . import cache, tables
 from .functions.columns import derive_ts_columns, url_encode_path
 from .operators import dedup, similarity, text
-from .operators.json_ops import flatten_array_of_structs, parse_json_col
+from .operators.json_ops import flatten_array_of_structs, json_rows, parse_json_col
 from .operators.relational import (
     asof_join,
     fill_nulls,
@@ -913,9 +913,9 @@ def q_src_login(spark, sf_dir):
     """src-login (P:36-73): explicit auth handshake (never at import time,
     §2.5.2); the token stays client-state, never a column."""
     client = _mock_login()
-    return spark.createDataFrame(
-        [(client.token is not None, len(client.token or ""))],
-        "login_ok BOOLEAN, token_len INT")
+    return json_rows(spark, [{"login_ok": client.token is not None,
+                              "token_len": len(client.token or "")}],
+                     "login_ok BOOLEAN, token_len INT")
 
 
 def q_src_get_json(spark, sf_dir):
@@ -974,8 +974,8 @@ def q_src_backoff(spark, sf_dir):
     from .sources.rest import RestClient
     client = RestClient(mock_server_url(), backoff_factor=0.01)
     resp = client.get_json("/flaky")
-    return spark.createDataFrame(
-        [(resp.attempts, bool(resp.body.get("ok")))],
+    return json_rows(
+        spark, [{"attempts": resp.attempts, "ok": bool(resp.body.get("ok"))}],
         "attempts INT, ok BOOLEAN")
 
 
@@ -1182,8 +1182,9 @@ def q_sink_rollback(spark, sf_dir):
     published_ok = (os.path.exists(os.path.join(base, "orders_p"))
                     and os.path.exists(os.path.join(base, "_manifests", "run-ok.json")))
     published_rows = spark.read.parquet(os.path.join(base, "orders_p")).count()
-    return spark.createDataFrame(
-        [(clean_after_fail, published_ok, published_rows)],
+    return json_rows(
+        spark, [{"rollback_clean": clean_after_fail, "published_ok": published_ok,
+                 "published_rows": published_rows}],
         "rollback_clean BOOLEAN, published_ok BOOLEAN, published_rows LONG")
 
 

@@ -11,9 +11,10 @@ instead of a silent KeyError.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -22,6 +23,22 @@ def parse_json_col(df: DataFrame, col: str, schema: StructType | str,
                    out: str = "parsed") -> DataFrame:
     """String JSON column -> typed struct (explicit contract, §1.3)."""
     return df.withColumn(out, F.from_json(F.col(col), schema))
+
+
+def json_rows(spark: SparkSession, rows: list[dict], ddl: str) -> DataFrame:
+    """Driver-held rows (API JSON bodies, one-row results) as a
+    JVM-local relation with the columns of ``ddl``.
+
+    ``spark.createDataFrame(list)`` pickles the rows into a Python RDD, so
+    every job that reads the frame starts Python workers to unpickle
+    them (``Scan ExistingRDD``). Here the rows travel as one JSON literal
+    that Catalyst folds: the plan is ``Generate inline(...) <- Range``
+    and no Python worker touches it. Missing keys and ``null`` read as
+    null; ``FAILFAST`` rejects a mistyped value (``"12"`` or ``1.5`` for
+    a LONG) when the frame is first planned.
+    """
+    return spark.range(1, numPartitions=1).select(F.inline(F.from_json(
+        F.lit(json.dumps(rows)), f"ARRAY<STRUCT<{ddl}>>", {"mode": "FAILFAST"})))
 
 
 def flatten_array_of_structs(df: DataFrame, array_col: str) -> DataFrame:

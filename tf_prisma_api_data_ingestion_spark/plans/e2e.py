@@ -12,11 +12,12 @@ Differences from the reference, by design:
   the same result;
 - the per-service inventory fan-out (P:394-401) is one finer-grained
   aggregation (plans/inventory.py);
-- outputs publish via StagedRun: all three reports or none, manifest
-  written last (P:431-451's rollback has a NameError on early failure —
-  §2.5.3);
+- outputs publish via StagedRun, all three or none, manifest last
+  (P:431-451's rollback raises NameError on early failure — §2.5.3);
 - the whole run is a pure function of (spark, api, out_base, run_date):
-  no module globals, so warm re-invocations cannot double rows (§2.5.1).
+  no module globals, so warm re-invocations cannot double rows (§2.5.1);
+- driver-held rows (inventory body, policies) are a JVM-local relation
+  (``json_rows``), so no Python-worker pool starts to unpickle them.
 
 The ingest frames are built only here (``inventory_frame``,
 ``alerts_scan``, ``alert_report_frame``); the src-get-json,
@@ -30,7 +31,7 @@ from datetime import date
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.json_ops import flatten_array_of_structs
+from ..operators.json_ops import flatten_array_of_structs, json_rows
 from ..sinks import StagedRun
 from ..sources.rest import RestClient, register_alerts_source
 from .report import alert_report_from_fixtures
@@ -43,11 +44,12 @@ INVENTORY_SCHEMA = (
 DEFAULT_POLICIES = [("pol-aws", "AWS baseline", "config", "high"),
                     ("pol-azure", "Azure baseline", "config", "medium"),
                     ("pol-gcp", "GCP baseline", "config", "low")]
+POLICY_COLUMNS = ("policyId", "policyName", "policyType", "severity")
 
 
 def inventory_frame(spark: SparkSession, body: dict) -> DataFrame:
     """Inventory rows from a ``/v1/inventory`` body (P:165-178)."""
-    df = spark.createDataFrame([body], INVENTORY_SCHEMA).select("groupedAggregates")
+    df = json_rows(spark, [body], INVENTORY_SCHEMA).select("groupedAggregates")
     return flatten_array_of_structs(df, "groupedAggregates").na.fill(0)
 
 
@@ -63,13 +65,12 @@ def alerts_scan(spark: SparkSession, client: RestClient) -> DataFrame:
 def alert_report_frame(spark: SparkSession, client: RestClient,
                        policies_rows: list[tuple] | None = None) -> DataFrame:
     """EP3: alerts scan -> broadcast policy join -> report (P:210-369)."""
-    # alert items carry no policyId in the mock; derive a stable one the
-    # way the reference's per-policy loop implies it
+    # mock alerts carry no policyId: derive it as the per-policy loop implies
     alerts = (alerts_scan(spark, client)
               .withColumn("policyId", F.concat(F.lit("pol-"), F.col("cloudType"))))
-    policies = spark.createDataFrame(
-        policies_rows or DEFAULT_POLICIES,
-        "policyId STRING, policyName STRING, policyType STRING, severity STRING")
+    policies = json_rows(spark, [dict(zip(POLICY_COLUMNS, r))
+                                 for r in policies_rows or DEFAULT_POLICIES],
+                         ", ".join(f"{c} STRING" for c in POLICY_COLUMNS))
     items = alerts.select(
         "policyId",
         F.struct("account", "accountId", "cloudType", "cloudAccountGroups")
@@ -82,10 +83,9 @@ def full_report_run(spark: SparkSession, base_url: str, username: str,
                     policies_rows: list[tuple] | None = None) -> dict:
     """Run the three reports and publish them transactionally.
 
-    Returns {"run_id", "outputs", "rows"} for observability. ``policies``
-    normally comes from the policy-list endpoint (P:217-256); the mock
-    serves alerts only, so the small policy frame is injected (it is the
-    broadcast side either way).
+    Returns {"run_id", "outputs", "rows"}. ``policies_rows`` normally
+    come from the policy-list endpoint (P:217-256); the mock serves alerts
+    only, so the small policy frame (the broadcast side) is injected.
     """
     client = RestClient(base_url, username=username, password=password,
                         backoff_factor=0.1).login()

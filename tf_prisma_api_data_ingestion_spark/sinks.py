@@ -34,6 +34,8 @@ from datetime import date
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.json_ops import json_rows
+
 
 def write_csv_report(df: DataFrame, path: str, single_file: bool = True,
                      quote_nonnumeric: bool = False,
@@ -82,8 +84,8 @@ def write_csv_report(df: DataFrame, path: str, single_file: bool = True,
     w = Window.orderBy(*[F.col(k).asc() for k in order_by])
     lines = df.select(F.concat_ws(",", *cells).alias("line"),
                       F.row_number().over(w).alias("_seq"))
-    body = lines.sparkSession.createDataFrame([(header, 0)], "line STRING, _seq INT") \
-        .unionByName(lines)
+    body = json_rows(lines.sparkSession, [{"line": header, "_seq": 0}],
+                     "line STRING, _seq INT").unionByName(lines)
     (body.repartition(1).sortWithinPartitions("_seq").select("line")
          .write.mode("overwrite").text(path))
 
