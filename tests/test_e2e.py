@@ -12,11 +12,15 @@ from pyspark.sql import functions as F
 
 from tf_prisma_api_data_ingestion_spark.plans.e2e import (
     alert_report_frame,
+    alerts_scan,
     full_report_run,
     inventory_frame,
 )
-from tf_prisma_api_data_ingestion_spark.sources import mock_api
-from tf_prisma_api_data_ingestion_spark.sources.rest import RestClient
+from tf_prisma_api_data_ingestion_spark.sources import mock_api, rest
+from tf_prisma_api_data_ingestion_spark.sources.rest import (
+    RestClient,
+    request_with_backoff,
+)
 
 # /v1/inventory bodies whose groupedAggregates break INVENTORY_SCHEMA
 MISTYPED_AGGREGATES = [
@@ -104,9 +108,10 @@ def test_full_report_run_bad_credentials_publishes_nothing(spark, tmp_path):
 
 
 def test_report_path_has_no_python_rdd_leaf(spark, capsys):
-    """The inventory body and the policy rows are JVM-local relations: no
-    plan on the report path reads a pickled Python RDD (``Scan
-    ExistingRDD``), so no Python-worker pool starts to unpickle them."""
+    """The inventory body, the alert rows and the policy rows are
+    JVM-local relations: no plan on the report path reads a pickled
+    Python RDD (``Scan ExistingRDD``) or scans a Python DataSource, so no
+    Python worker starts."""
     client = RestClient(mock_api.mock_server_url(), username=mock_api.MOCK_USER,
                         password=mock_api.MOCK_PASSWORD).login()
     inventory_frame(spark, mock_api.INVENTORY_FIXTURE).explain()
@@ -114,6 +119,43 @@ def test_report_path_has_no_python_rdd_leaf(spark, capsys):
     plans = capsys.readouterr().out
     assert plans.count("Physical Plan") == 2, plans
     assert "ExistingRDD" not in plans, plans
+    assert "BatchScan prisma_alerts" not in plans, plans
+    assert "(Python)" not in plans, plans
+
+
+def test_alerts_scan_relogs_in_after_token_expiry(spark):
+    """The driver scan fetches as the caller's credentialed client, so a
+    token that expires after login costs one re-login, not the scan."""
+    url = mock_api.mock_server_url()
+    client = RestClient(url, username=mock_api.MOCK_USER,
+                        password=mock_api.MOCK_PASSWORD,
+                        backoff_factor=0.01).login()
+    logins = mock_api.server_state().login_count
+    request_with_backoff(url + "/admin/expire", method="POST", payload={})
+    assert alerts_scan(spark, client).count() == mock_api.N_ALERTS
+    assert mock_api.server_state().login_count == logins + 1
+
+
+def test_full_report_run_failed_page_publishes_nothing(
+        spark, tmp_path, monkeypatch):
+    """A page request that exhausts its retries fails the run before
+    anything is staged or published."""
+    real = rest.request_with_backoff
+
+    def page_1_exhausts(url, method="GET", headers=None, payload=None, **kw):
+        if (payload or {}).get("pageToken") == "page-1":
+            raise RuntimeError(f"{method} {url}: exhausted 5 retries")
+        return real(url, method, headers, payload, **kw)
+
+    monkeypatch.setattr(rest, "request_with_backoff", page_1_exhausts)
+    out = str(tmp_path)
+    with pytest.raises(RuntimeError, match="exhausted"):
+        full_report_run(spark, mock_api.mock_server_url(),
+                        mock_api.MOCK_USER, mock_api.MOCK_PASSWORD,
+                        out, date(2024, 2, 5))
+    assert not os.path.exists(os.path.join(out, "_manifests"))
+    assert not os.path.exists(os.path.join(out, "year=2024"))
+    assert not os.path.exists(os.path.join(out, "_staging", "report-2024-02-05"))
 
 
 @pytest.mark.parametrize("aggregates", MISTYPED_AGGREGATES)

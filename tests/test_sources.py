@@ -8,6 +8,7 @@ import urllib.error
 
 import pytest
 
+from tf_prisma_api_data_ingestion_spark.plans.e2e import alerts_scan
 from tf_prisma_api_data_ingestion_spark.sources import mock_api
 from tf_prisma_api_data_ingestion_spark.sources.rest import (
     RestClient,
@@ -91,14 +92,38 @@ def test_datasource_partition_per_page(spark, url, client):
     assert got == want
 
 
-def test_datasource_matches_serial_fetch(spark, url, client):
+@pytest.mark.parametrize("options", [
+    {},
+    {"path": "/v2/alerts-opaque"},
+    {"paging": "token"},
+    {"paging": "token-fanout", "path": "/v2/alerts-opaque",
+     "probe_key": "countOnly"},
+    {"paging": "token-fanout", "path": "/v2/alerts-opaque"},
+], ids=["indexed", "indexed-no-total", "token", "fanout-probe", "fanout-bodied"])
+def test_datasource_matches_serial_fetch(spark, url, client, options):
+    """The DataSource matches the serial walk, and the driver scan
+    returns its rows in the same order."""
     register_alerts_source(spark)
     df = (spark.read.format("prisma_alerts")
           .option("base_url", url).option("token", client.token)
-          .option("backoff_factor", "0.01").load())
-    serial = [i["resource"]["accountId"]
-              for i in fetch_all_pages(client, "/v2/alerts", {})]
-    assert sorted(r.accountId for r in df.collect()) == sorted(serial)
+          .option("backoff_factor", "0.01").options(**options).load())
+    serial = [i["resource"]["accountId"] for i in
+              fetch_all_pages(client, options.get("path", "/v2/alerts"), {})]
+    rows = df.collect()
+    assert sorted(r.accountId for r in rows) == sorted(serial)
+    assert alerts_scan(spark, client, **options).collect() == rows
+
+
+@pytest.mark.parametrize("option,value", [
+    ("page_size", "0"), ("max_pages", "0"), ("rate_limit", "-1")])
+def test_out_of_range_option_is_rejected(spark, url, client, option, value):
+    with pytest.raises(ValueError, match=f"{option} must be"):
+        alerts_scan(spark, client, **{option: value})
+    register_alerts_source(spark)
+    with pytest.raises(Exception, match=f"{option} must be"):
+        (spark.read.format("prisma_alerts")
+         .option("base_url", url).option("token", client.token)
+         .option(option, value).load().collect())
 
 
 def test_datasource_token_mode_single_partition(spark, url, client):
@@ -172,25 +197,30 @@ def test_fetch_all_pages_min_interval_paces(client):
     assert time.time() - t0 >= 0.4
 
 
-def test_rate_limit_bounds_aggregate_rate_across_partitions(spark, url, client):
+@pytest.mark.parametrize("executor", ["datasource", "driver"])
+def test_rate_limit_bounds_aggregate_rate_across_partitions(
+        spark, url, client, executor):
     """The reference's contract is ~1 page/s per API (P:268); a 32-way
     fan-out must not legally hammer the endpoint at 32x that. With
     rate_limit set, the aggregate request-START rate across all
-    partitions stays <= the limit, while requests still OVERLAP in
-    flight (parallel transfer the serial chain walk cannot do)."""
+    partitions (or driver fetch threads) stays <= the limit, while
+    requests still OVERLAP in flight (parallel transfer the serial chain
+    walk cannot do)."""
     import json
-    import time
 
-    register_alerts_source(spark)
     rate, delay = 8.0, 0.4
+    options = {"page_size": "40",               # ceil(237/40) = 6 pages
+               "rate_limit": str(rate),
+               "filters": json.dumps({"_delay": delay})}
     srv = mock_api.server_state()
     srv.alert_request_log = []
-    df = (spark.read.format("prisma_alerts")
-          .option("base_url", url).option("token", client.token)
-          .option("page_size", "40")            # ceil(237/40) = 6 pages
-          .option("rate_limit", str(rate))
-          .option("filters", json.dumps({"_delay": delay}))
-          .option("backoff_factor", "0.01").load())
+    if executor == "driver":
+        df = alerts_scan(spark, client, **options)
+    else:
+        register_alerts_source(spark)
+        df = (spark.read.format("prisma_alerts")
+              .option("base_url", url).option("token", client.token)
+              .option("backoff_factor", "0.01").options(**options).load())
     assert df.count() == mock_api.N_ALERTS
     # page fetches only (the planning probe posts limit=1)
     starts = sorted(t for t, lim in srv.alert_request_log if lim == 40)

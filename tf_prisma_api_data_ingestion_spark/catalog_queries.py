@@ -927,11 +927,12 @@ def q_src_get_json(spark, sf_dir):
 
 
 def q_src_paginated_post(spark, sf_dir):
-    """src-paginated-post (P:266-318): partition-per-page parallel fetch
-    through the Spark 4 Python DataSource (one probe learns the total,
-    executors pull pages independently — vs the reference's serial
-    1 page/s driver loop), then an alert-shaped aggregation. The empty
-    cloudAccountGroups rows (§2.5.6) are counted null-safely."""
+    """src-paginated-post (P:266-318): the report run's alert scan (one
+    probe learns the total, a driver thread pool fetches the pages in
+    parallel — vs the reference's serial 1 page/s driver loop — and the
+    rows enter the JVM as one literal), fetched while the frame is built,
+    then an alert-shaped aggregation. The empty cloudAccountGroups rows
+    (§2.5.6) are counted null-safely."""
     from .plans.e2e import alerts_scan
     alerts = alerts_scan(spark, _mock_login())
     return (alerts.groupBy("account")
@@ -1198,10 +1199,11 @@ def q_plan_alert_report(spark, sf_dir):
 
 
 def q_plan_e2e_alert(spark, sf_dir):
-    """EP3 through the REAL ingestion path: paginated connector scan
-    (partition-per-page) -> broadcast join to the policy frame -> the
-    alert-report stages (P:210-369). The mock's alert formula makes the
-    whole pipeline range()-reproducible for the oracle."""
+    """EP3 through the REAL ingestion path: the report run's alert scan
+    (pages planned and fetched on the driver, no Python worker) ->
+    broadcast join to the policy frame -> the alert-report stages
+    (P:210-369). The mock's alert formula makes the whole pipeline
+    range()-reproducible for the oracle."""
     from .plans.e2e import alert_report_frame
     return alert_report_frame(spark, _mock_login())
 

@@ -6,18 +6,18 @@ report -> three CSVs published atomically under a date-partitioned prefix.
 Differences from the reference, by design:
 - login is explicit per-run (P:73 logs in at import time — §2.5.2);
 - the N+1 per-policy alert pagination (P:256-318) is ONE paginated scan
-  through the partition-per-page DataSource + a broadcast join to the
-  policy frame, and a run scans the API ONCE: the report-sized alert
-  report is materialized, so the staged CSV and the returned count read
-  the same result;
+  + a broadcast join to the policy frame. The driver plans the pages with
+  the ``prisma_alerts`` planner and a thread pool fetches them. A run
+  scans the API ONCE: the report-sized alert report is materialized, so
+  the staged CSV and the returned count read the same result;
 - the per-service inventory fan-out (P:394-401) is one finer-grained
   aggregation (plans/inventory.py);
 - outputs publish via StagedRun, all three or none, manifest last
   (P:431-451's rollback raises NameError on early failure — §2.5.3);
 - the whole run is a pure function of (spark, api, out_base, run_date):
   no module globals, so warm re-invocations cannot double rows (§2.5.1);
-- driver-held rows (inventory body, policies) are a JVM-local relation
-  (``json_rows``), so no Python-worker pool starts to unpickle them.
+- driver-held rows (inventory body, alerts, policies) are JVM-local
+  relations (``json_rows``), so a report run starts no Python worker.
 
 The ingest frames are built only here (``inventory_frame``,
 ``alerts_scan``, ``alert_report_frame``); the src-get-json,
@@ -26,6 +26,7 @@ src-paginated-post and plan-e2e-alert catalog keys share them.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,14 @@ from pyspark.sql import functions as F
 
 from ..operators.json_ops import flatten_array_of_structs, json_rows
 from ..sinks import StagedRun
-from ..sources.rest import RestClient, register_alerts_source
+from ..sources.rest import (
+    ALERT_SCHEMA,
+    RestClient,
+    _AlertsOptions,
+    _alert_row,
+    fetch_page,
+    plan_pages,
+)
 from .report import alert_report_from_fixtures
 
 INVENTORY_SCHEMA = (
@@ -53,13 +61,23 @@ def inventory_frame(spark: SparkSession, body: dict) -> DataFrame:
     return flatten_array_of_structs(df, "groupedAggregates").na.fill(0)
 
 
-def alerts_scan(spark: SparkSession, client: RestClient) -> DataFrame:
-    """One ``prisma_alerts`` scan as the logged-in ``client``; executors
-    fetch pages in parallel."""
-    register_alerts_source(spark)
-    return (spark.read.format("prisma_alerts")
-            .option("base_url", client.base_url).option("token", client.token)
-            .option("backoff_factor", str(client.backoff_factor)).load())
+def alerts_scan(spark: SparkSession, client: RestClient,
+                **options: str) -> DataFrame:
+    """The alerts frame, fetched now as the logged-in ``client``.
+
+    ``options`` are the ``prisma_alerts`` reader options (``base_url``
+    and the auth come from ``client``). The driver plans the pages with
+    ``plan_pages``, one thread per task slot fetches them with
+    ``fetch_page`` in page order, and the rows reach the JVM as one
+    folded ``json_rows`` literal (~112 bytes per alert), so no Python
+    DataSource or Python worker runs.
+    """
+    opts = _AlertsOptions({**options, "base_url": client.base_url})
+    pages = plan_pages(opts, client)
+    with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+        items = pool.map(lambda page: fetch_page(opts, client, page), pages)
+        rows = [_alert_row(i).asDict() for page in items for i in page]
+    return json_rows(spark, rows, ALERT_SCHEMA)
 
 
 def alert_report_frame(spark: SparkSession, client: RestClient,

@@ -17,12 +17,13 @@ lambda.py):
 
 Scale design: token-chained pagination is inherently serial, so the plain
 ``fetch_all_pages`` is the strict-token fallback. When the API reports a
-total count (X-Total-Count here; a count endpoint in general), the Spark 4
-Python DataSource plans ONE INPUT PARTITION PER PAGE and executors fetch
-pages independently and in parallel — ingestion throughput then scales
-with the cluster instead of the driver's 1 page/s loop (the reference's
-ceiling, BASELINE.md). Rate limits are honored per-executor by the same
-exponential backoff.
+total count (X-Total-Count here; a count endpoint in general) or re-usable
+cursors, ``plan_pages`` plans ONE REQUEST PER PAGE and ``fetch_page``
+fetches each independently, paced by not-before stamps. A report run
+fetches its pages from a driver thread pool (``plans.e2e.alerts_scan``);
+bulk backfills read through the ``prisma_alerts`` DataSource, one input
+partition per page, so throughput scales with the cluster instead of the
+reference's 1 page/s driver loop (BASELINE.md).
 """
 
 from __future__ import annotations
@@ -33,8 +34,10 @@ import math
 import time
 import urllib.error
 import urllib.request
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
+
+from pyspark.sql import Row
 
 RETRYABLE = {429, 500, 502, 503, 504}
 
@@ -201,17 +204,20 @@ def fetch_all_pages(client: RestClient, path: str, payload: dict,
 
 
 # ---------------------------------------------------------------------
-# Spark 4 Python DataSource: partition-per-page parallel ingestion
+# Alert scan: one page planner and one page fetch, driven from the
+# driver (plans.e2e.alerts_scan) or from the Spark 4 Python DataSource
 # ---------------------------------------------------------------------
 
 ALERT_SCHEMA = ("account STRING, accountId STRING, cloudType STRING, "
                 "cloudAccountGroups ARRAY<STRING>")
 
 
-def _alert_row(item: dict) -> tuple:
+def _alert_row(item: dict) -> Row:
+    """An alert item's ``ALERT_SCHEMA`` row; no groups read as ``[]``."""
     r = item["resource"]
-    return (r.get("account"), r.get("accountId"), r.get("cloudType"),
-            r.get("cloudAccountGroups", []))
+    return Row(account=r.get("account"), accountId=r.get("accountId"),
+               cloudType=r.get("cloudType"),
+               cloudAccountGroups=r.get("cloudAccountGroups", []))
 
 
 def _total_count(headers: dict) -> int | None:
@@ -221,8 +227,20 @@ def _total_count(headers: dict) -> int | None:
                  if k.lower() == "x-total-count"), None)
 
 
+@dataclass(frozen=True)
+class _Page:
+    """One planned page request: its ``pageToken`` (None for the first
+    page) and absolute not-before epoch (0 = unpaced), or, with ``walk``,
+    the whole serial chain."""
+
+    token: str | None = None
+    not_before: float = 0.0
+    walk: bool = False
+
+
 class _AlertsOptions:
-    """Reader options shared by the batch and streaming alert sources."""
+    """Reader options of the alert scans: the driver scan and the batch
+    and streaming DataSources."""
 
     def __init__(self, options):
         self.base_url = options["base_url"]
@@ -238,69 +256,138 @@ class _AlertsOptions:
         self.password = options.get("password", "")
         self.prisma_id = options.get("prisma_id", "")
         rate_limit = float(options.get("rate_limit", "0"))
-        # seconds between serial request starts (0 = unpaced)
-        self.interval = 1.0 / rate_limit if rate_limit > 0 else 0.0
         if self.paging not in ("indexed", "token", "token-fanout"):
             raise ValueError("paging must be indexed|token|token-fanout,"
                              f" got {self.paging!r}")
+        for name, value, low in (("page_size", self.page_size, 1),
+                                 ("max_pages", self.max_pages, 1),
+                                 ("rate_limit", rate_limit, 0)):
+            if value < low:
+                raise ValueError(f"{name} must be >= {low}, got {value!r}")
+        # seconds between request starts (0 = unpaced)
+        self.interval = 1.0 / rate_limit if rate_limit else 0.0
 
     def _client(self) -> RestClient:
         return RestClient(self.base_url, backoff_factor=self.backoff,
                           token=self.token, username=self.username,
                           password=self.password, prisma_id=self.prisma_id)
 
-    def _items(self, token: str | None) -> list:
+    def _items(self, client: RestClient, token: str | None) -> list:
         """Items of one page request (``token`` None = the first page)."""
         body = dict(self.filters, limit=self.page_size,
                     **({"pageToken": token} if token else {}))
-        return self._client().post_json(self.path, body).body.get("items", [])
+        return client.post_json(self.path, body).body.get("items", [])
+
+
+def plan_pages(opts: _AlertsOptions, client: RestClient) -> list[_Page]:
+    """Plan a scan's page requests on the driver, as ``client``.
+
+    - ``indexed``: one limit=1 probe of page 0 learns ``X-Total-Count``,
+      then one page per ``pageToken: "page-{i}"``. No total -> the walk.
+    - ``token-fanout``: walk the cursor chain (cursor-only with
+      ``probe_key``, else bodied and paced), then re-fetch the first
+      discovered cursor once (limit=1); a 4xx means single-use tokens,
+      so the plan degrades to the walk instead of failing N fetches later.
+    - ``token``: one ``walk`` page, the serial chain.
+
+    Planned pages carry not-before stamps ``t0 + i/rate_limit``, so the
+    aggregate request rate holds whatever the fetch concurrency.
+    """
+    tokens = None
+    if opts.paging == "token-fanout":
+        probe = {opts.probe_key: True} if opts.probe_key else {}
+        # a bodied walk transfers full pages, so it spends from the
+        # aggregate request budget; cursor-only probes stay unpaced
+        chain = _chain(client, opts.path, dict(opts.filters, **probe),
+                       opts.page_size, 0.0 if opts.probe_key else opts.interval)
+        tokens = []
+        for token, body in itertools.islice(chain, opts.max_pages):
+            tokens.append(token)
+            if not body.get("nextPageToken"):
+                break
+        else:
+            raise RuntimeError(f"cursor walk exceeded max_pages={opts.max_pages}")
+        if len(tokens) > 1:
+            try:
+                client.post_json(opts.path, dict(opts.filters, limit=1,
+                                                 pageToken=tokens[1]))
+            except urllib.error.HTTPError as e:
+                if not 400 <= e.code < 500:
+                    raise
+                tokens = None
+    elif opts.paging == "indexed":
+        total = _total_count(client.post_json(
+            opts.path, dict(opts.filters, limit=1)).headers)
+        if total is not None:
+            tokens = [None] + [f"page-{i}" for i in
+                               range(1, math.ceil(total / opts.page_size))]
+    if tokens is None:
+        return [_Page(walk=True)]
+    t0 = time.time() if opts.interval else 0.0
+    return [_Page(tok, t0 + i * opts.interval) for i, tok in enumerate(tokens)]
+
+
+def fetch_page(opts: _AlertsOptions, client: RestClient,
+               page: _Page) -> Iterable[dict]:
+    """The alert items of one planned page, fetched as ``client`` no
+    earlier than its not-before stamp; a ``walk`` page streams its chain
+    lazily, paced."""
+    if page.walk:
+        return fetch_all_pages(client, opts.path, opts.filters,
+                               page_size=opts.page_size,
+                               min_interval=opts.interval)
+    time.sleep(max(0.0, page.not_before - time.time()))
+    try:
+        return opts._items(client, page.token)
+    except urllib.error.HTTPError as e:
+        if opts.paging == "token-fanout" and page.token and 400 <= e.code < 500:
+            # the planner's cursor no longer resolves: single-use or
+            # expired tokens, or the dataset changed mid-scan; a partial
+            # scan cannot re-walk without duplicating rows
+            raise RuntimeError(
+                "token-fanout cursor re-fetch failed with HTTP "
+                f"{e.code}: the API does not honor re-usable page "
+                "tokens (or the dataset changed mid-scan); rerun "
+                "with .option('paging', 'token') for the serial "
+                "single-walk mode") from e
+        raise
 
 
 def register_alerts_source(spark) -> None:
-    """Register the ``prisma_alerts`` format. Import is deferred so the
-    module stays importable on Spark < 4 (the DataSource API is 4.0+).
+    """Register the ``prisma_alerts`` format, the distributed reader for
+    bulk backfills: ``plan_pages`` runs in ``partitions()`` and each
+    planned page is one input partition that an executor fetches with
+    ``fetch_page``. A report run's scan (``plans.e2e.alerts_scan``)
+    drives the same planner and fetch from the driver. Import is deferred
+    so the module stays importable on Spark < 4 (DataSource API is 4.0+).
 
     Paging modes (option ``paging``):
 
-    - ``indexed`` (default): PRECONDITION — the endpoint must accept
+    - ``indexed`` (default): PRECONDITION — the endpoint accepts
       index-addressable page tokens (``pageToken: "page-{i}"``) and
-      report ``X-Total-Count`` (any header-name case). Only then can the
-      planner emit one input partition per page for parallel
-      executor-side fetch. When the page-0 probe reports no total, the
-      plan falls back to the serial ``token`` walk (one partition) so
-      the scan still returns every row. The real Prisma Cloud API does
-      NOT satisfy the precondition: its ``nextPageToken``
-      (lambda.py:266-318) is an opaque server-issued token that can only
-      be discovered by walking the chain.
+      reports ``X-Total-Count`` (any header-name case). Without a total
+      the plan falls back to the serial ``token`` walk, so the scan still
+      returns every row. The real Prisma Cloud API does NOT satisfy the
+      precondition: its ``nextPageToken`` (lambda.py:266-318) is an
+      opaque server-issued token discoverable only by walking the chain.
     - ``token-fanout``: opaque-token parallel mode for production APIs.
-      ``partitions()`` walks the token chain ON THE DRIVER to enumerate
-      page cursors — a cheap cursor-only pass when the API supports a
-      probe parameter (option ``probe_key``, merged into the payload as
-      ``{probe_key: true}``, asks for tokens without bodies; omit it and
-      the walk downloads bodies once and discards them, still O(pages)
-      driver time — AND the whole dataset transfers twice, so without
-      ``probe_key`` prefer plain ``token`` mode unless executor-side
-      parse is the bottleneck) — then emits ONE PARTITION PER DISCOVERED
-      CURSOR so executors re-fetch and parse pages in parallel. Planning
-      is O(pages) serial HTTP; the heavy work (body transfer, JSON
-      parse, row materialization) scales with the cluster.
+      The driver walks the chain to enumerate cursors — cheaply when the
+      API supports a cursor-only probe (option ``probe_key``, merged into
+      the payload as ``{probe_key: true}``); without it the walk
+      downloads every body once and discards it (the dataset transfers
+      twice, so prefer ``token`` unless parse is the bottleneck) — then
+      plans one page per cursor.
 
-      ASSUMPTIONS (checked, not silently skewed): the API must treat
-      page tokens as RE-USABLE (each cursor is fetched once in planning
-      and once in read) and the underlying dataset as SNAPSHOT-STABLE
-      for the duration of the scan. Token re-use is PROBED at plan time
-      (one limit=1 re-fetch of the first discovered cursor): if the API
-      issues single-use tokens the plan silently degrades to the serial
-      ``token`` walk (one partition, fresh tokens — correct, reference-
-      ceiling throughput). Tokens that expire MID-SCAN still fail the
-      executor re-fetch with a RuntimeError naming ``paging=token`` —
-      a partially-read scan cannot re-walk without duplicating rows —
-      and a dataset mutating mid-scan can skip or duplicate rows exactly
-      as a serial re-walk would. When in doubt, use ``token``.
-    - ``token``: strict-token fallback — ONE input partition that walks
-      the ``nextPageToken`` chain serially via ``fetch_all_pages``.
-      Correct against any conforming API, but throughput is bounded by
-      the chain walk (the reference's ceiling).
+      ASSUMPTIONS (checked, not silently skewed): page tokens are
+      RE-USABLE and the dataset is SNAPSHOT-STABLE for the scan. Re-use
+      is probed at plan time; single-use tokens degrade the plan to the
+      serial walk. Tokens that expire MID-SCAN fail the re-fetch with a
+      RuntimeError naming ``paging=token``, and a dataset mutating
+      mid-scan can skip or duplicate rows exactly as a serial re-walk
+      would. When in doubt, use ``token``.
+    - ``token``: strict-token fallback — ONE page that walks the
+      ``nextPageToken`` chain serially via ``fetch_all_pages``. Correct
+      against any conforming API, at the reference's throughput ceiling.
 
     Optional ``username``/``password``/``prisma_id`` options enable
     executor-side 401 re-login mid-scan (long scans outlive tokens).
@@ -309,126 +396,22 @@ def register_alerts_source(spark) -> None:
     AGGREGATE page-request rate across the whole scan — the reference's
     1 page/s contract (P:268) generalized; per-request backoff alone
     would let 32 partitions hit the API at 32× the rate until 429s
-    throttle them. The planner stamps page i with an absolute not-before
-    time ``t0 + i/rate_limit`` and executors sleep until their stamp. A
-    late executor fires at once, so a stall can release a short catch-up
-    burst (token-bucket semantics), but the whole-scan average never
-    exceeds the limit; across nodes this leans on NTP-level clock sync.
-    Every serial walk (``token`` mode, the indexed fallback, a bodied
-    fanout planning walk — it transfers full pages) starts pages
-    ``1/rate_limit`` apart.
+    throttle them. Page i waits for its not-before stamp; a late fetch
+    fires at once, so a stall can release a short catch-up burst
+    (token-bucket semantics), but the whole-scan average never exceeds
+    the limit; across nodes this leans on NTP-level clock sync. Every
+    serial walk (``token``, the indexed fallback, a bodied fanout
+    planning walk) starts pages ``1/rate_limit`` apart.
     """
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    class _Page(InputPartition):
-        """Every mode's partition: one page request (its ``pageToken``,
-        None for the first page) or, with ``walk``, the serial chain."""
-        def __init__(self, token: str | None = None, not_before: float = 0.0,
-                     walk: bool = False):
-            self.token = token
-            self.not_before = not_before  # absolute epoch; 0 = unpaced
-            self.walk = walk
-
     class _AlertsReader(_AlertsOptions, DataSourceReader):
-        def _walk_cursors(self) -> list:
-            """Driver-side token-chain walk: returns the page cursors
-            [None, tok1, tok2, ...]. With ``probe_key`` set the server
-            skips bodies (cursor-only probe); otherwise bodies download
-            once here and are discarded — executors re-fetch in read()."""
-            probe = {self.probe_key: True} if self.probe_key else {}
-            # a bodied walk (no probe_key) transfers full pages, so it
-            # spends from the same aggregate request budget; cursor-only
-            # probes are advertised-cheap and stay unpaced
-            pace = 0.0 if self.probe_key else self.interval
-            cursors = []
-            for token, body in itertools.islice(
-                    _chain(self._client(), self.path, dict(self.filters, **probe),
-                           self.page_size, pace), self.max_pages):
-                cursors.append(token)
-                if not body.get("nextPageToken"):
-                    return cursors
-            raise RuntimeError(f"cursor walk exceeded max_pages={self.max_pages}")
-
-        def _cursor_reusable(self, cursor: str) -> bool:
-            """One cheap re-fetch (limit=1) of an already-walked cursor:
-            True iff the API honors token re-use (the fanout plan's
-            precondition). 4xx -> single-use/expired tokens."""
-            try:
-                self._client().post_json(
-                    self.path, dict(self.filters, limit=1,
-                                    pageToken=cursor))
-                return True
-            except urllib.error.HTTPError as e:
-                if 400 <= e.code < 500:
-                    return False
-                raise
-
-        def _paced(self, tokens: list) -> list:
-            """One partition per page token, not-before stamps spaced
-            1/rate_limit apart whatever the executor concurrency."""
-            t0 = time.time() if self.interval else 0.0
-            return [_Page(tok, t0 + i * self.interval)
-                    for i, tok in enumerate(tokens)]
-
         def partitions(self):
-            if self.paging == "token-fanout":
-                # opaque tokens, parallel plan: enumerate cursors on the
-                # driver, then one partition per discovered cursor.
-                # Before fanning out, PROBE the first discovered cursor
-                # once: a 4xx on re-fetch means the API issues single-use
-                # (or already-expired) tokens — the fanout plan's core
-                # assumption is broken at plan time, so degrade to the
-                # serial chain walk (one partition, fresh tokens) instead
-                # of erroring N executors later. Mid-scan expiry can
-                # still surface in read(); that path keeps the loud error
-                # because a partial scan cannot be resumed without
-                # duplicating rows.
-                cursors = self._walk_cursors()
-                if len(cursors) == 1 or self._cursor_reusable(cursors[1]):
-                    return self._paced(cursors)
-            elif self.paging == "indexed":
-                # one cheap page-0 probe learns the total; one partition
-                # per page -> executors fetch in parallel (vs the
-                # reference's serial 1 page/s driver loop). No total ->
-                # the pages are only discoverable by walking the chain.
-                resp = self._client().post_json(
-                    self.path, dict(self.filters, limit=1))
-                total = _total_count(resp.headers)
-                if total is not None:
-                    n = max(1, math.ceil(total / self.page_size))
-                    return self._paced(
-                        [None] + [f"page-{i}" for i in range(1, n)])
-            # opaque server tokens, no parallel plan possible or
-            # requested: a single serial partition walks the chain
-            return [_Page(walk=True)]
+            return [InputPartition(p) for p in plan_pages(self, self._client())]
 
         def read(self, partition):
-            if partition.walk:
-                items = fetch_all_pages(self._client(), self.path,
-                                        self.filters, page_size=self.page_size,
-                                        min_interval=self.interval)
-            else:
-                items = self._fetch(partition)
-            for item in items:
+            for item in fetch_page(self, self._client(), partition.value):
                 yield _alert_row(item)
-
-        def _fetch(self, page) -> list:
-            time.sleep(max(0.0, page.not_before - time.time()))
-            try:
-                return self._items(page.token)
-            except urllib.error.HTTPError as e:
-                if (self.paging == "token-fanout" and page.token
-                        and 400 <= e.code < 500):
-                    # token-fanout assumption broken: the cursor the
-                    # planner discovered no longer resolves (single-use /
-                    # expired token, or the dataset mutated mid-scan)
-                    raise RuntimeError(
-                        "token-fanout cursor re-fetch failed with HTTP "
-                        f"{e.code}: the API does not honor re-usable page "
-                        "tokens (or the dataset changed mid-scan); rerun "
-                        "with .option('paging', 'token') for the serial "
-                        "single-walk mode") from e
-                raise
 
     class PrismaAlertsDataSource(DataSource):
         @classmethod
@@ -478,7 +461,7 @@ def register_alerts_stream_source(spark) -> None:
 
         def _fetch(self, page: int) -> list:
             self._pacer.wait()
-            return self._items(f"page-{page}" if page else None)
+            return self._items(self._client(), f"page-{page}" if page else None)
 
         def initialOffset(self):
             return {"page": 0}
