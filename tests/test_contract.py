@@ -117,3 +117,53 @@ def test_mutated_schema_fixture_aborts_with_diff(spark, tmp_path):
     }).to_parquet(str(tmp_path / "events.parquet"), index=False)
     with pytest.raises(AssertionError, match="events"):
         tables.assert_contract(spark, str(tmp_path))
+
+
+def _env_names_read(pkg_dir) -> set[str]:
+    """Every name the package reads through ``os.environ`` /
+    ``os.getenv``; a non-literal name is reported as ``<dynamic>``."""
+    import ast
+
+    def is_os(node, attr: str) -> bool:
+        return (isinstance(node, ast.Attribute) and node.attr == attr
+                and isinstance(node.value, ast.Name) and node.value.id == "os")
+
+    def name_of(node) -> str:
+        return (node.value if isinstance(node, ast.Constant)
+                and isinstance(node.value, str) else "<dynamic>")
+
+    names = set()
+    for path in pkg_dir.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and (
+                    is_os(node.func, "getenv")
+                    or (isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "get"
+                        and is_os(node.func.value, "environ"))):
+                names.add(name_of(node.args[0]))
+            elif (isinstance(node, ast.Subscript)
+                  and is_os(node.value, "environ")):
+                names.add(name_of(node.slice))
+            elif (isinstance(node, ast.Compare)
+                  and any(is_os(c, "environ") for c in node.comparators)):
+                names.add(name_of(node.left))
+    return names
+
+
+def test_engine_reads_only_deployment_settings_from_env(spark):
+    """Tuning values are constants, not environment knobs: the engine
+    reads only where it runs (master, cores, memory, shuffle width) and
+    where the data lives."""
+    from pathlib import Path
+
+    import tf_prisma_api_data_ingestion_spark as pkg
+
+    assert _env_names_read(Path(pkg.__file__).parent) == {
+        "SPARK_GRAFT_CPUS", "SPARK_SHUFFLE_PARTITIONS", "SPARK_GRAFT_MEM",
+        "SPARK_MASTER", "MASTER", "SPARK_GRAFT_SF_DIR"}
+    conf = spark.conf
+    assert conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "1024"
+    assert conf.get(
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "67108864"
+    assert conf.get("spark.sql.join.preferSortMergeJoin") == "true"

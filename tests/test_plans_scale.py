@@ -294,3 +294,20 @@ def test_bucket_tree_keeps_rank_plan_shape(spark):
     for line in plan.splitlines():
         if "row_number() windowspecdefinition" in line:
             assert "_rk_b" in line
+
+
+def test_plans_audit_names_only_registered_keys(monkeypatch):
+    """PLANS.md is regenerated, not committed, so a key renamed or
+    deleted from the catalog must fail here rather than in the
+    regenerator's first run."""
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "scripts" / "plans_audit.py"
+    spec = importlib.util.spec_from_file_location("plans_audit", path)
+    mod = importlib.util.module_from_spec(spec)
+    monkeypatch.setattr(sys, "path", list(sys.path))  # script prepends "."
+    spec.loader.exec_module(mod)
+    audited = {name for name, _ in mod.AUDIT}
+    assert audited - set(QUERIES) - set(THROUGHPUT_QUERIES) == set()

@@ -42,23 +42,21 @@ class TestAdaptiveBuckets:
         assert _adaptive_buckets(nums_parquet) == floor
 
     def test_unknown_stats_fall_to_floor(self, spark, nums, monkeypatch):
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            _adaptive_buckets)
+        from tf_prisma_api_data_ingestion_spark.operators import rank
         floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # createDataFrame has no leaf stats -> sentinel estimate -> floor,
         # even under a byte target that would otherwise explode the count
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_BYTES", "64")
-        assert _adaptive_buckets(nums) == floor
+        monkeypatch.setattr(rank, "RANK_BUCKET_BYTES", 64)
+        assert rank._adaptive_buckets(nums) == floor
 
     def test_grows_with_size_and_caps(self, spark, nums_parquet, monkeypatch):
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            _adaptive_buckets)
+        from tf_prisma_api_data_ingestion_spark.operators import rank
         floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_BYTES", "64")
-        grown = _adaptive_buckets(nums_parquet)
+        monkeypatch.setattr(rank, "RANK_BUCKET_BYTES", 64)
+        grown = rank._adaptive_buckets(nums_parquet)
         assert grown > floor
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_BYTES", "1")
-        assert _adaptive_buckets(nums_parquet) <= 4096
+        monkeypatch.setattr(rank, "RANK_BUCKET_BYTES", 1)
+        assert rank._adaptive_buckets(nums_parquet) <= 4096
 
     def test_rank_invariant_to_bucket_count(self, spark, nums):
         from tf_prisma_api_data_ingestion_spark.operators.rank import (

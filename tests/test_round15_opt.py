@@ -1,7 +1,6 @@
 """Round-15 optimization-round invariants: hardening of the adaptive
-bucket derivation (env misconfiguration degrades to the floor, the cap
-is a hard bound) and the shared-frame guard on the IVF/PQ internal
-``vecs``/``sv`` parameters.
+bucket derivation (the cap is a hard bound) and the shared-frame guard
+on the IVF/PQ internal ``vecs``/``sv`` parameters.
 """
 
 from __future__ import annotations
@@ -21,52 +20,26 @@ def nums_parquet(spark, tmp_path):
 
 
 class TestAdaptiveBucketsHardening:
-    def test_zero_byte_target_falls_to_floor(self, spark, nums_parquet,
-                                             monkeypatch):
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            _adaptive_buckets)
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # 0 would divide-by-zero unguarded; must clamp, not raise.
-        # max(1, 0) == 1 byte/bucket -> derived hits the cap, which is
-        # >= floor here, so the call must simply not crash and respect
-        # the cap
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_BYTES", "0")
-        got = _adaptive_buckets(nums_parquet)
-        assert floor <= got <= 4096
-
-    def test_garbage_env_falls_to_floor(self, spark, nums_parquet,
-                                        monkeypatch):
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            _adaptive_buckets)
-        floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_BYTES", "not-a-number")
-        assert _adaptive_buckets(nums_parquet) == floor
-        monkeypatch.delenv("SPARK_GRAFT_RANK_BUCKET_BYTES")
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_CAP", "")
-        assert _adaptive_buckets(nums_parquet) == floor
-
     def test_cap_bounds_the_floor(self, spark, nums_parquet, monkeypatch):
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            _adaptive_buckets)
+        from tf_prisma_api_data_ingestion_spark.operators import rank
         floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert floor > 1  # precondition for the cap<floor scenario
         # a cap below the session floor must win: the when-tree size is
         # the hard safety bound (r15 ADVICE)
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_CAP", "1")
-        assert _adaptive_buckets(nums_parquet) == 1
+        monkeypatch.setattr(rank, "RANK_BUCKET_CAP", 1)
+        assert rank._adaptive_buckets(nums_parquet) == 1
 
     def test_rank_exact_at_cap_one(self, spark, nums_parquet, monkeypatch):
         # bucket count never affects values: rank output at the extreme
         # cap matches an uncapped run
-        from tf_prisma_api_data_ingestion_spark.operators.rank import (
-            exact_global_rank)
+        from tf_prisma_api_data_ingestion_spark.operators import rank
         ref = sorted(
-            exact_global_rank(nums_parquet, "v", tiebreak=["id"],
-                              out="r").select("id", "r").collect())
-        monkeypatch.setenv("SPARK_GRAFT_RANK_BUCKET_CAP", "1")
+            rank.exact_global_rank(nums_parquet, "v", tiebreak=["id"],
+                                   out="r").select("id", "r").collect())
+        monkeypatch.setattr(rank, "RANK_BUCKET_CAP", 1)
         got = sorted(
-            exact_global_rank(nums_parquet, "v", tiebreak=["id"],
-                              out="r").select("id", "r").collect())
+            rank.exact_global_rank(nums_parquet, "v", tiebreak=["id"],
+                                   out="r").select("id", "r").collect())
         assert got == ref
 
 

@@ -107,9 +107,8 @@ def triangle_counts(edges: DataFrame, a: str = "doc_a",
     # without the barrier each consumer re-expands the caller's whole
     # edge-building pipeline — the bench's co-purchase projection
     # appeared 66x in one physical plan (66 scans of orders+lineitem,
-    # 66 TakeOrderedAndProject copies; r14 plans/r14/
-    # op-triangle-count_before.txt). Guide §2.4/§5: one materialization,
-    # every consumer reads the cache.
+    # 66 TakeOrderedAndProject copies). Guide §2.4/§5: one
+    # materialization, every consumer reads the cache.
     und = tracked_persist(
         edges.select(F.least(a, b).alias("u"),
                      F.greatest(a, b).alias("v"))

@@ -53,12 +53,17 @@ running plain single-window ntile SQL.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+# _adaptive_buckets: one boundary bucket per this many estimated input
+# bytes (64 MiB, the advisory granularity AQE coalesces to), and a hard
+# cap on the bucket count
+RANK_BUCKET_BYTES = 64 << 20
+RANK_BUCKET_CAP = 4096
 
 
 def _order_exprs(key_col: str, desc: bool,
@@ -84,23 +89,21 @@ def range_boundaries(df: DataFrame, key_col: str,
 
 
 def _adaptive_buckets(df: DataFrame) -> int:
-    """Scale-adaptive boundary count (r14, guide §2): the bucket count
+    """Scale-adaptive boundary count (guide §2): the bucket count
     bounds one local-sort task at ~corpus/B, so a CONSTANT tuned for
     local mode (the session's shuffle-partition setting) re-creates the
     unbounded-task problem at 100 TB. Derive B from the input's Catalyst
-    size estimate instead — one bucket per ~SPARK_GRAFT_RANK_BUCKET_BYTES
-    (default 64 MB, the same advisory granularity AQE coalesces to) —
-    with the session shuffle setting as the floor (keeps small-scale
-    plans exactly as before: any input under floor×target stays at the
-    floor) and SPARK_GRAFT_RANK_BUCKET_CAP (default 4096) as a HARD cap
-    that also bounds the floor (r15: a cluster session at 20000 shuffle
-    partitions must not mint a 20000-leaf when-tree)
-    (the bucket-assignment when-tree costs O(log B) per row and the
-    boundary sketch ships B-1 numbers to the driver — both fine at
-    4096, measured r11; past the cap the sketch accuracy dial matters
-    more than more buckets). Estimate-only: boundary
-    count affects task balance, never values, so a bad estimate costs
-    skew headroom, not correctness."""
+    size estimate instead — one bucket per ``RANK_BUCKET_BYTES`` — with
+    the session shuffle setting as the floor (any input under
+    floor×target stays at the floor) and ``RANK_BUCKET_CAP`` as a HARD
+    cap that also bounds the floor (a cluster session at 20000 shuffle
+    partitions must not mint a 20000-leaf when-tree). The
+    bucket-assignment when-tree costs O(log B) per row and the boundary
+    sketch ships B-1 numbers to the driver — both fine at 4096; past the
+    cap the sketch accuracy dial matters more than more buckets. Both
+    constants are read at call time. Estimate-only: boundary count
+    affects task balance, never values, so a bad estimate costs skew
+    headroom, not correctness."""
     spark = df.sparkSession
     try:
         floor_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -120,13 +123,6 @@ def _adaptive_buckets(df: DataFrame) -> int:
         # large estimates (post-join multiplications) surface as the
         # Java object — stringify those
         est = raw if isinstance(raw, int) else int(raw.toString())
-        # env knobs parsed inside the same guard: a misconfigured value
-        # (non-numeric, zero, negative) degrades to the floor instead
-        # of raising from every rank/ntile/shard call
-        target = max(1, int(os.environ.get("SPARK_GRAFT_RANK_BUCKET_BYTES",
-                                           str(64 << 20))))
-        cap = max(1, int(os.environ.get("SPARK_GRAFT_RANK_BUCKET_CAP",
-                                        "4096")))
     except Exception:  # stats unavailable (exotic plan) — keep the floor
         return floor_n
     if est >= 1 << 60:
@@ -140,7 +136,8 @@ def _adaptive_buckets(df: DataFrame) -> int:
     # O(log B) per row but ships B-1 boundaries through every plan, so
     # a session set to e.g. 20000 shuffle partitions must not mint a
     # 20000-leaf tree just because the floor says so
-    return min(cap, max(floor_n, -(-est // target)))
+    return min(RANK_BUCKET_CAP,
+               max(floor_n, -(-est // RANK_BUCKET_BYTES)))
 
 
 def exact_global_rank(df: DataFrame, key_col: str, *,

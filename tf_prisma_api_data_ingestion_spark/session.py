@@ -59,7 +59,7 @@ def get_spark(app_name: str = "tf-prisma-spark", cpus: int | str | None = None,
         # automatic — on a 1000-executor cluster the same ceiling
         # simply spreads wider.
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-                os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "1024"))
+                "1024")
         # without this, persisted frames freeze the UNcoalesced
         # initialPartitionNum-wide shuffle (cached plans are excluded
         # from AQE by default), so every consumer of a tracked_persist
@@ -67,31 +67,16 @@ def get_spark(app_name: str = "tf-prisma-spark", cpus: int | str | None = None,
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
         # Shuffled-hash instead of sort-merge where a hash table fits
-        # (guide §3.1): two independent, value-neutral gates measured
-        # r14 (same-session interleaved A/B, min-of-3; tpch-q5
-        # 1.82->1.46s, plan-provenance-report 3.92->2.99s,
-        # dedup-embedding-lsh 2.30->1.90s — the sort on both shuffle
-        # sides is pure overhead when partitions fit in memory).
-        # - the AQE threshold converts SMJ->SHJ at runtime only when
-        #   EVERY post-shuffle partition is under 64 MB of MEASURED
-        #   bytes — scale-safe by construction (a 100 TB shuffle's
-        #   partitions exceed it and keep sort-merge's spill path);
-        # - the STATIC gate (preferSortMergeJoin=false) is OPT-IN as of
-        #   r15 (set SPARK_GRAFT_PREFER_SMJ=false to enable): it picks
-        #   SHJ from ESTIMATED sizes, so on a cluster a post-UDF or
-        #   cached input with a bad estimate gets a hash build side
-        #   that was never measured — an unbounded-memory risk the
-        #   engine should not take by default (r14 verdict #1). The r15
-        #   same-session A/B (scripts/r15_shj_ab.py) measured the
-        #   static gate's local value at <= 0.2 s on the three keys the
-        #   r14 config was tuned on (tpch-q5 1.90->1.68, embedding-lsh
-        #   1.71->1.62, provenance-report neutral) — the AQE gate keeps
-        #   most of the win with none of the estimate risk.
+        # (guide §3.1): AQE converts SMJ->SHJ at runtime only when EVERY
+        # post-shuffle partition is under 64 MB of MEASURED bytes, so a
+        # 100 TB shuffle keeps sort-merge's spill path. The static gate
+        # stays off (preferSortMergeJoin=true): it picks SHJ from
+        # ESTIMATED sizes, and a post-UDF or cached input with a bad
+        # estimate would get a hash build side that was never measured,
+        # an unbounded-memory risk.
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD",
-                               "67108864"))
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"))
+                "67108864")
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         # Arrow for any pandas-UDF path (the slow path, used sparingly)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep broadcast threshold default (10MB) — dims here are tiny;
