@@ -167,3 +167,38 @@ def test_engine_reads_only_deployment_settings_from_env(spark):
     assert conf.get(
         "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "67108864"
     assert conf.get("spark.sql.join.preferSortMergeJoin") == "true"
+
+
+# strings whose case mapping is special: German sharp s, Greek final
+# sigma, titlecase digraph, ligature, apostrophe-n, dotted capital I,
+# j with caron, a supplementary-plane (Deseret) letter
+CASE_SAMPLE = ["straße", "ΟΔΟΣ", "ǆemal", "ﬁx", "ŉ", "İstanbul", "ǰ", "𐐨", "ß"]
+
+
+def test_case_mapping_contract(spark):
+    """The session maps case with the JVM, not ICU (session.py). For
+    non-ASCII strings that mapping follows the JVM's default locale, so a
+    host whose locale changes it fails here, loudly; initcap, where the
+    two mappings differ, is not used anywhere in the engine."""
+    import ast
+    from pathlib import Path
+
+    import tf_prisma_api_data_ingestion_spark as pkg
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    df = spark.createDataFrame([(s,) for s in CASE_SAMPLE], "s STRING")
+    got = df.select("s", F.upper("s").alias("u"), F.lower("s").alias("l"))
+    assert {r.s: (r.u, r.l) for r in got.collect()} == {
+        s: (s.upper(), s.lower()) for s in CASE_SAMPLE}
+
+    def text(node):  # names, attributes, imports and SQL strings
+        for field in ("id", "attr", "name", "value"):
+            if isinstance(getattr(node, field, None), str):
+                return getattr(node, field).lower()
+        return ""
+
+    uses = [f"{path}:{getattr(node, 'lineno', '?')}"
+            for path in Path(pkg.__file__).parent.rglob("*.py")
+            for node in ast.walk(ast.parse(path.read_text()))
+            if "initcap" in text(node)]
+    assert uses == []

@@ -4,13 +4,18 @@ failure."""
 
 from __future__ import annotations
 
+import csv
+import glob
 import os
+import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import date
 
 import pytest
 from pyspark.sql import functions as F
 
 from tf_prisma_api_data_ingestion_spark.plans.e2e import (
+    DEFAULT_POLICIES,
     alert_report_frame,
     alerts_scan,
     full_report_run,
@@ -65,10 +70,68 @@ def test_full_report_run_scans_alerts_once(spark, tmp_path):
     assert limits == [1, 100, 100, 100], limits
 
 
+def _alert_csv_rows(out: str, run_date: date) -> int:
+    """Data rows of the published alert_report CSV of one run."""
+    [part] = glob.glob(os.path.join(
+        out, f"year={run_date.year}", f"month={run_date.month}",
+        f"day={run_date.day}", "alert_report", "part-*.csv"))
+    with open(part, newline="") as f:
+        return sum(1 for _ in csv.DictReader(f))
+
+
+def test_full_report_run_is_four_jobs(spark, tmp_path):
+    """A report run is the policy broadcast plus the three CSV writes:
+    the alert count is observed on the alert report's write, so no job
+    holds or recounts the report. Broadcast jobs inherit the calling
+    thread's job group, so the group holds every job of the run."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "report-run-shape"
+    before = set(tracker.getJobIdsForGroup(group))
+    run_date = date(2024, 2, 6)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = full_report_run(spark, mock_api.mock_server_url(),
+                              mock_api.MOCK_USER, mock_api.MOCK_PASSWORD,
+                              str(tmp_path), run_date)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # listener events arrive asynchronously: wait for a settled view
+    deadline, seen = time.monotonic() + 10, None
+    while time.monotonic() < deadline:
+        jobs = set(tracker.getJobIdsForGroup(group)) - before
+        if jobs == seen and all(tracker.getJobInfo(j).status == "SUCCEEDED"
+                                for j in jobs):
+            break
+        seen = jobs
+        time.sleep(0.25)
+    assert len(seen) == 4, sorted(seen)
+    assert res["rows"]["alerts"] == _alert_csv_rows(str(tmp_path), run_date) == 21
+
+
+def test_concurrent_report_runs_keep_their_own_counts(spark, tmp_path):
+    """Two runs on one session, from two threads, each return the row
+    count of their own alert report, not the other run's."""
+    run_date = date(2024, 2, 7)
+    runs = {"all": DEFAULT_POLICIES,
+            "aws": [p for p in DEFAULT_POLICIES if p[0] == "pol-aws"]}
+
+    def one(name):
+        return full_report_run(spark, mock_api.mock_server_url(),
+                               mock_api.MOCK_USER, mock_api.MOCK_PASSWORD,
+                               str(tmp_path / name), run_date, runs[name])
+
+    with ThreadPoolExecutor(2) as pool:
+        results = dict(zip(runs, pool.map(one, runs)))
+    counts = {name: _alert_csv_rows(str(tmp_path / name), run_date)
+              for name in runs}
+    assert counts == {"all": 21, "aws": 7}
+    assert {name: r["rows"]["alerts"] for name, r in results.items()} == counts
+
+
 def test_alert_report_golden_csv_bytes(spark, tmp_path):
     """SURVEY §5.4: golden CSV bytes for the alert report at a fixed run
     date, in the reference's exact QUOTE_NONNUMERIC format."""
-    import glob
     from tf_prisma_api_data_ingestion_spark.plans.report import (
         alert_report_from_fixtures,
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 
 import pytest
 
@@ -88,6 +89,47 @@ def test_staged_run_does_not_clobber_previous_run_on_failure(tmp_path, df):
     # key-delete rollback would have removed a colliding key)
     assert os.path.isdir(os.path.join(base, "report"))
     assert os.path.exists(os.path.join(base, "_manifests", "day1.json"))
+
+
+def test_staged_rerun_crash_mid_publish_withdraws_manifest(
+        tmp_path, df, monkeypatch):
+    """A same-run_id rerun that crashes between output moves must not
+    leave the previous manifest committing new, missing and old outputs
+    at once; a clean rerun then publishes the whole run."""
+    base = str(tmp_path)
+    names = ("a", "b", "c")
+
+    def run_all():
+        with StagedRun(base, "r") as run:
+            for name in names:
+                run.stage(df, name)
+
+    def manifests_naming_run():
+        return [path for path in glob.glob(os.path.join(base, "_manifests", "*"))
+                if json.load(open(path))["run_id"] == "r"]
+
+    run_all()
+    assert manifests_naming_run()
+    real_move = shutil.move
+    moves = []
+
+    def crash_on_second(src, dst):
+        moves.append(dst)
+        if len(moves) == 2:
+            raise OSError("crash mid-publish")
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_on_second)
+    with pytest.raises(OSError, match="crash mid-publish"):
+        run_all()
+    assert manifests_naming_run() == []
+    monkeypatch.setattr(shutil, "move", real_move)
+    run_all()
+    manifest = json.load(open(os.path.join(base, "_manifests", "r.json")))
+    assert sorted(manifest["outputs"]) == list(names)
+    for name in names:
+        assert glob.glob(os.path.join(base, name, "part-*")), name
+    assert os.listdir(os.path.join(base, "_staging")) == []
 
 
 def test_write_partitioned_layout_and_pruning(spark, tmp_path, df):

@@ -8,8 +8,9 @@ Differences from the reference, by design:
 - the N+1 per-policy alert pagination (P:256-318) is ONE paginated scan
   + a broadcast join to the policy frame. The driver plans the pages with
   the ``prisma_alerts`` planner and a thread pool fetches them. A run
-  scans the API ONCE: the report-sized alert report is materialized, so
-  the staged CSV and the returned count read the same result;
+  scans the API ONCE and computes the alert report once: its CSV write is
+  the report's only action, and an ``Observation`` on that write counts
+  the returned rows;
 - the per-service inventory fan-out (P:394-401) is one finer-grained
   aggregation (plans/inventory.py);
 - outputs publish via StagedRun, all three or none, manifest last
@@ -29,7 +30,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from datetime import date
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.json_ops import flatten_array_of_structs, json_rows
@@ -104,6 +105,11 @@ def full_report_run(spark: SparkSession, base_url: str, username: str,
     Returns {"run_id", "outputs", "rows"}. ``policies_rows`` normally
     come from the policy-list endpoint (P:217-256); the mock serves alerts
     only, so the small policy frame (the broadcast side) is injected.
+
+    A run is four Spark jobs: the policy broadcast and the three CSV
+    writes. ``rows["alerts"]`` is observed on the alert report's write,
+    not counted by a job of its own, so a failure anywhere in the report
+    surfaces inside ``StagedRun`` and rolls the staging back.
     """
     client = RestClient(base_url, username=username, password=password,
                         backoff_factor=0.1).login()
@@ -114,11 +120,13 @@ def full_report_run(spark: SparkSession, base_url: str, username: str,
     inventory = inventory_frame(spark, body).withColumn("transaction_date", run_day)
     resource_type = inventory.withColumn("resourceIdentity", F.lit("Resource Type"))
 
-    # EP3: the one API scan of the run; the report (policies x accounts)
-    # is materialized so staging and the row count share it
+    # EP3: the one API scan of the run (fetched here, on the driver); the
+    # report's row count is observed on its CSV write. Unnamed, so
+    # concurrent runs on one session never read each other's count
+    observed = Observation()
     alert_report = (alert_report_frame(spark, client, policies_rows)
                     .withColumn("transaction_date", run_day)
-                    .localCheckpoint())
+                    .observe(observed, F.count(F.lit(1)).alias("rows")))
 
     run_id = f"report-{run_date.isoformat()}"
     prefix = f"year={run_date.year}/month={run_date.month}/day={run_date.day}"
@@ -132,4 +140,4 @@ def full_report_run(spark: SparkSession, base_url: str, username: str,
                         f"{prefix}/inventory_resource_type_report",
                         f"{prefix}/alert_report"],
             "rows": {"inventory": len(body["groupedAggregates"]),
-                     "alerts": alert_report.count()}}
+                     "alerts": observed.get["rows"]}}

@@ -166,14 +166,16 @@ class StagedRun:
             run.stage(df2, "alerts", fmt="parquet")
         # __exit__ publishes; any exception inside rolls staging back
 
-    Publish order: move every staged directory into place, then write
-    ``_manifests/<run_id>.json`` LAST — the manifest is the commit marker.
+    Publish order: remove a previous ``_manifests/<run_id>.json`` (a
+    rerun of the same run_id), move every staged directory into place,
+    then write the manifest LAST — the manifest is the commit marker.
     Failure before the manifest leaves only unreferenced files (and the
     staging cleaner removes them); there is no state where a reader sees a
-    partial manifest. This replaces the reference's delete-published-keys
-    rollback (lambda.py:444-451), which references a variable that is
-    unbound on early failure (§2.5.3) and can delete a *previous* run's
-    file on key collision.
+    partial manifest, or a manifest over a mix of two runs' outputs.
+    This replaces the reference's delete-published-keys rollback
+    (lambda.py:444-451), which references a variable that is unbound on
+    early failure (§2.5.3) and can delete a *previous* run's file on key
+    collision.
     """
 
     def __init__(self, base: str, run_id: str):
@@ -200,6 +202,11 @@ class StagedRun:
 
     # -- commit protocol -------------------------------------------------
     def publish(self) -> list[str]:
+        # a rerun of this run_id replaces outputs the previous manifest
+        # lists: withdraw it first, so a crash mid-publish leaves no
+        # manifest committing a mix of new, missing and old outputs
+        if os.path.exists(self.manifest_path()):
+            os.remove(self.manifest_path())
         published = []
         for name in self._staged:
             dst = os.path.join(self.base, name)
@@ -215,7 +222,7 @@ class StagedRun:
         tmp = os.path.join(self.manifest_dir, f".{self.run_id}.tmp")
         with open(tmp, "w") as f:
             json.dump({"run_id": self.run_id, "outputs": self._staged}, f)
-        os.rename(tmp, os.path.join(self.manifest_dir, f"{self.run_id}.json"))
+        os.rename(tmp, self.manifest_path())
         self._published = True
         self.rollback()  # clear the now-empty staging prefix
         return published
