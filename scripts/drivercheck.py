@@ -29,6 +29,12 @@ def main() -> int:
     from selfcheck import TABLES, compare  # reuse the comparison core
 
     import __spark_entry__ as e
+    from tf_prisma_api_data_ingestion_spark import tables
+
+    # every table is read with a pinned schema, so drift would otherwise
+    # surface as silent nulls; the check restores the session's conf,
+    # leaving each query to defend itself as below
+    tables.assert_contract(spark, sf_dir)
 
     con = duckdb.connect()
     for t in TABLES:

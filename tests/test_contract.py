@@ -119,6 +119,102 @@ def test_mutated_schema_fixture_aborts_with_diff(spark, tmp_path):
         tables.assert_contract(spark, str(tmp_path))
 
 
+
+def _jobs_started(spark, build) -> int:
+    """Spark jobs that ``build()`` starts, whichever thread or job group
+    starts them. Job ids are sequential per SparkContext, so the ids of
+    marker jobs run just before and just after ``build`` bracket them."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_ids() -> list[int]:
+        group = f"marker-{uuid.uuid4()}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not (ids := tracker.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, "marker job never seen"
+            time.sleep(0.05)
+        return ids
+
+    before = max(marker_ids())
+    build()
+    return min(marker_ids()) - before - 1
+
+
+def test_loads_start_no_job(spark):
+    """Every table is read with its pinned schema: building the
+    DataFrame runs no schema-inference job."""
+    from tf_prisma_api_data_ingestion_spark import tables
+
+    started = {name: _jobs_started(spark, lambda n=name: tables.load(spark, SF, n))
+               for name in tables.TABLE_NAMES}
+    assert started == {name: 0 for name in tables.TABLE_NAMES}
+
+
+def test_event_stream_starts_no_job(spark):
+    """The streaming events source picks the ts generation from a
+    parquet footer on the driver, not from a Spark read."""
+    from tf_prisma_api_data_ingestion_spark.streaming.windows import (
+        _event_stream,
+    )
+
+    assert _jobs_started(spark, lambda: _event_stream(spark, SF)) == 0
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_pinned_schemas_match_files(spark, sf):
+    """The pins are exactly what Spark infers from the testdata, so a
+    pinned read plans and answers like an inferred one. events is
+    compared with its contract: ts is read as TIMESTAMP whatever the
+    file's generation."""
+    from tf_prisma_api_data_ingestion_spark import tables
+
+    for name in tables.TABLE_NAMES:
+        inferred = spark.read.parquet(f"/root/testdata/{sf}/{name}.parquet").schema
+        if name == "events":
+            assert [(f.name, f.nullable) for f in inferred] == [
+                (n, True) for n, _ in tables.EVENTS_FIELDS]
+            assert [f.dataType for f in inferred if f.name != "ts"] == [
+                t for n, t in tables.EVENTS_FIELDS if n != "ts"]
+        else:
+            assert tables.read_schema(name) == inferred, name
+
+
+def test_contract_canary_covers_every_table(spark, tmp_path):
+    """A pinned read turns a renamed column into nulls, so the canary
+    must check every table's footer, not only the five it once did; and
+    it must leave the caller's nanosAsLong setting as it found it."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tf_prisma_api_data_ingestion_spark import tables
+
+    for name in tables.TABLE_NAMES:
+        shutil.copy(f"{SF}/{name}.parquet", tmp_path / f"{name}.parquet")
+    lineitem = pq.read_table(f"{SF}/lineitem.parquet")
+    pq.write_table(lineitem.rename_columns(
+        ["l_discount_pct" if c == "l_discount" else c
+         for c in lineitem.column_names]), tmp_path / "lineitem.parquet")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(AssertionError, match="lineitem") as err:
+            tables.assert_contract(spark, str(tmp_path))
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
+    assert "l_discount_pct" in str(err.value)
+    assert "orders" not in str(err.value)
+
 def _env_names_read(pkg_dir) -> set[str]:
     """Every name the package reads through ``os.environ`` /
     ``os.getenv``; a non-literal name is reported as ``<dynamic>``."""

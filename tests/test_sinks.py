@@ -132,6 +132,28 @@ def test_staged_rerun_crash_mid_publish_withdraws_manifest(
     assert os.listdir(os.path.join(base, "_staging")) == []
 
 
+
+def test_publish_crash_removes_staging(tmp_path, df, monkeypatch):
+    """A publish that raises part-way must not leave the run's staged,
+    unmoved outputs behind under ``_staging/<run_id>``."""
+    base = str(tmp_path)
+    real_move = shutil.move
+    moves = []
+
+    def crash_on_second(src, dst):
+        moves.append(dst)
+        if len(moves) == 2:
+            raise OSError("crash mid-publish")
+        return real_move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", crash_on_second)
+    with pytest.raises(OSError, match="crash mid-publish"):
+        with StagedRun(base, "r") as run:
+            for name in ("a", "b", "c"):
+                run.stage(df, name)
+    assert not os.path.exists(os.path.join(base, "_staging", "r"))
+    assert not os.path.exists(os.path.join(base, "_manifests", "r.json"))
+
 def test_write_partitioned_layout_and_pruning(spark, tmp_path, df):
     out = str(tmp_path / "p")
     write_partitioned(df, out, ts_col="d")

@@ -169,9 +169,11 @@ class StagedRun:
     Publish order: remove a previous ``_manifests/<run_id>.json`` (a
     rerun of the same run_id), move every staged directory into place,
     then write the manifest LAST — the manifest is the commit marker.
-    Failure before the manifest leaves only unreferenced files (and the
-    staging cleaner removes them); there is no state where a reader sees a
-    partial manifest, or a manifest over a mix of two runs' outputs.
+    If publish raises, the run's staging prefix is removed and the error
+    re-raised; outputs already moved stay in place, unreferenced and with
+    no manifest, until a rerun of the same run_id replaces them. There is
+    no state where a reader sees a partial manifest, or a manifest over a
+    mix of two runs' outputs.
     This replaces the reference's delete-published-keys rollback
     (lambda.py:444-451), which references a variable that is unbound on
     early failure (§2.5.3) and can delete a *previous* run's file on key
@@ -243,7 +245,11 @@ class StagedRun:
 
     def __exit__(self, exc_type, exc, tb) -> bool:
         if exc_type is None:
-            self.publish()
+            try:
+                self.publish()
+            except BaseException:
+                self.rollback()
+                raise
         else:
             self.rollback()
         return False  # re-raise

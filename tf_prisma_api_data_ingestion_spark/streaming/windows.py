@@ -19,9 +19,12 @@ Scale notes:
 from __future__ import annotations
 
 from contextlib import contextmanager
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import tables
 
 # Stateful streaming ops pay a FIXED per-shuffle-partition cost: every
 # partition opens its own state store instance(s) — a stream-stream join
@@ -63,24 +66,18 @@ def _event_stream(spark: SparkSession, sf_dir: str,
     # parquet reader decode the physical µs int64 as an instant instead
     # of reinterpreting it as a raw long (the silent wrong-answer mode
     # VERDICT r3 flagged). Schema text and the legacy-nanos branch both
-    # come from tables.py, so the contract lives in ONE place; a
-    # footer-only probe picks the generation (same branch as
-    # tables.load). An empty/not-yet-populated source dir streams with
-    # the current-generation schema — the probe only exists to catch
-    # legacy files, and files appearing later were always required to
-    # match the schema the stream started with (file-source contract).
-    from pyspark.sql import types as T
-
-    from .. import tables
-
+    # come from tables.py, so the contract lives in ONE place; the same
+    # footer-only probe as tables.load (no Spark job) reads the first
+    # file the glob matches to pick the generation. An empty/not-yet-
+    # populated source dir streams with the current-generation schema —
+    # the probe only exists to catch legacy files, and files appearing
+    # later were always required to match the schema the stream started
+    # with (file-source contract).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        probe = (spark.read.option("pathGlobFilter", glob).parquet(sf_dir)
-                 .schema["ts"].dataType)
-        legacy = isinstance(probe, T.LongType)
-    except Exception:  # no matching files yet: assume current generation
-        legacy = False
+    first = next((p for p in sorted(Path(sf_dir).glob(glob))
+                  if p.is_file() and not p.name.startswith(("_", "."))), None)
+    legacy = first is not None and tables.is_legacy_nanos(str(first))
     reader = (spark.readStream
               .schema(tables.events_ddl(legacy_nanos=legacy))
               .option("pathGlobFilter", glob))
@@ -438,7 +435,7 @@ def enriched_segment_counts(spark: SparkSession, sf_dir: str,
     is the standard enrichment shape for an always-on ingest: dims stay
     in a table, facts stream past them.
     """
-    dim = (spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = (tables.load(spark, sf_dir, "customer")
            .select(F.col("c_custkey").alias("user_id"), "c_mktsegment"))
     agg = (_event_stream(spark, sf_dir)
            .join(dim, "user_id")                     # stream-static, stateless
@@ -537,7 +534,7 @@ def enriched_daily_report_to_parquet(spark: SparkSession, sf_dir: str,
 
     Returns the input rows processed by THIS run (0 on pure replay).
     """
-    dim = (spark.read.parquet(f"{sf_dir}/customer.parquet")
+    dim = (tables.load(spark, sf_dir, "customer")
            .select(F.col("c_custkey").alias("user_id"), "c_mktsegment"))
     agg = (_event_stream(spark, sf_dir)
            .join(dim, "user_id")                     # stream-static, stateless
@@ -735,7 +732,6 @@ def streaming_drift(spark: SparkSession, sf_dir: str,
            .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
                     .alias("window_start"), "bin", "n_bin"))
 
-    from .. import tables
     ev = tables.load(spark, sf_dir, "events")
     ref = (ev.select(binx.alias("bin"))
              .groupBy("bin").agg(F.count(F.lit(1)).alias("_rb")))
@@ -779,9 +775,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str,
     """
     from ..operators.text import gopher_rules
 
-    schema = (spark.read.option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir).schema)
-    docs = (spark.readStream.schema(schema)
+    docs = (spark.readStream.schema(tables.read_schema("documents"))
             .option("pathGlobFilter", "documents.parquet")
             .parquet(sf_dir))
     agg = (gopher_rules(docs, keep=("source",))
@@ -911,9 +905,7 @@ def streaming_token_meter(spark: SparkSession, sf_dir: str, merges,
     streaming_quality_gate. Drained with availableNow into a memory
     sink, like every streaming twin in this module. Returns
     (source, n_docs, n_words, n_pieces)."""
-    schema = (spark.read.option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir).schema)
-    docs = (spark.readStream.schema(schema)
+    docs = (spark.readStream.schema(tables.read_schema("documents"))
             .option("pathGlobFilter", "documents.parquet")
             .parquet(sf_dir))
     m = token_meter_projection(F.col("text"), merges, engine=engine)
@@ -963,8 +955,8 @@ def streaming_provenance_meter(spark: SparkSession, sf_dir: str,
     on that column (pinned by test and by the oracle twin)."""
     from ..operators.text import passage_hash_array, passage_hashes
 
-    docs_b = (spark.read.option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
+    docs_b = (spark.read.schema(tables.read_schema("documents"))
+              .option("pathGlobFilter", "documents.parquet").parquet(sf_dir))
     did, h = passage_hashes(F.col("doc_id"), F.col("text"),
                             window=window, stride=stride)
     cwins = (docs_b.filter(F.col("doc_id") % 10 != 0)
@@ -1040,8 +1032,8 @@ def streaming_near_dup_meter(spark: SparkSession, sf_dir: str,
     """
     from ..operators.dedup import word_shingles
 
-    docs_b = (spark.read.option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
+    docs_b = (spark.read.schema(tables.read_schema("documents"))
+              .option("pathGlobFilter", "documents.parquet").parquet(sf_dir))
     corpus = docs_b.filter(F.col("doc_id") % 10 != 0)
     sh = word_shingles(F.col("text"), n)
     inv = (corpus.select(F.col("doc_id").alias("index_id"),
