@@ -162,7 +162,7 @@ def main() -> None:
             keep = ("FileScan" in s or "Join" in s or "Exchange" in s
                     or "HashAggregate" in s or "WindowGroupLimit" in s
                     or "Generate posexplode" in s or "Window" in s
-                    or "BatchScan" in s or "PythonDataSource" in s
+                    or "BatchScan" in s
                     or "MapInPandas" in s or "ArrowEvalPython" in s)
             if not keep:
                 continue
@@ -174,46 +174,7 @@ def main() -> None:
                   "lineage truncated by design; per-iteration plans are "
                   "join+partial-sum+exchange, see the operator docstring)")
         print("```\n")
-    _token_fanout_section(spark)
     spark.stop()
-
-
-def _token_fanout_section(spark) -> None:
-    """token-fanout scan evidence: the opaque-cursor walk happens once on
-    the driver at planning time; the EXECUTED scan is one input partition
-    per discovered cursor (parallel executor-side re-fetch), visible as
-    the partition count of an otherwise single BatchScan node."""
-    from tf_prisma_api_data_ingestion_spark.sources.mock_api import (
-        MOCK_PASSWORD,
-        MOCK_USER,
-        mock_server_url,
-    )
-    from tf_prisma_api_data_ingestion_spark.sources.rest import (
-        RestClient,
-        register_alerts_source,
-    )
-    url = mock_server_url()
-    client = RestClient(url, username=MOCK_USER, password=MOCK_PASSWORD,
-                        backoff_factor=0.01).login()
-    register_alerts_source(spark)
-    df = (spark.read.format("prisma_alerts")
-          .option("base_url", url).option("token", client.token)
-          .option("path", "/v2/alerts-opaque")
-          .option("paging", "token-fanout").option("probe_key", "countOnly")
-          .option("backoff_factor", "0.01").load())
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    print("## src-paginated-post (token-fanout planning)\n")
-    print("*Claim:* opaque cursors enumerated once on the driver (cheap "
-          "countOnly probe); executed scan fans out ONE PARTITION PER "
-          "CURSOR — parallel page fetch without index-addressable tokens.\n")
-    print("```")
-    for line in plan.splitlines():
-        s = line.strip()
-        if "BatchScan" in s or "PythonDataSource" in s or "Scan" in s:
-            print(s[:220])
-    print(f"input partitions: {df.rdd.getNumPartitions()} "
-          f"(= discovered cursors for 237 alerts / 100 per page)")
-    print("```\n")
 
 
 if __name__ == "__main__":

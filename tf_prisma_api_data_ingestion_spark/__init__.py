@@ -8,7 +8,7 @@ Layout:
     tables      - test-table loaders for the driver-provided parquet data
     catalog     - driver-facing (Spark query, DuckDB oracle) registry
     operators/  - composable DataFrame -> DataFrame operators (SURVEY.md §2 IDs)
-    sources/    - REST connector (login/backoff/pagination DataSource) + mock API
+    sources/    - REST connector (login/backoff/pagination, alert stream) + mock API
     functions/  - scalar/column helpers (timestamps, url-encode)
     plans/      - end-to-end report pipelines (EP1 inventory, EP3 alert)
     sinks       - CSV/partitioned writers + staged-commit run transaction

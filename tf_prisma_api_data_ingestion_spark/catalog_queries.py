@@ -944,15 +944,15 @@ def q_src_paginated_post(spark, sf_dir):
 
 def q_src_stream_alerts(spark, sf_dir):
     """Streaming twin of src-paginated-post: the Spark 4 Python STREAMING
-    DataSource (SimpleDataSourceStreamReader) drains every page available
-    at trigger time with availableNow and checkpoints the page cursor —
-    a restart resumes after the last ingested page instead of re-reading
-    the whole export (the reference Lambda's model). Result aggregated
-    per cloud for a compact deterministic snapshot; oracle replays the
-    mock's alert formula over range(237)."""
-    from .sources.rest import register_alerts_stream_source
+    DataSource (SimpleDataSourceStreamReader) drains every alert available
+    at trigger time with availableNow and checkpoints the count of alerts
+    consumed — a restart resumes after the last ingested alert instead of
+    re-reading the whole export (the reference Lambda's model). Result
+    aggregated per cloud for a compact deterministic snapshot; oracle
+    replays the mock's alert formula over range(237)."""
+    from .sources.rest import register_alerts_source
     client = _mock_login()
-    register_alerts_stream_source(spark)
+    register_alerts_source(spark)
     stream = (spark.readStream.format("prisma_alerts_stream")
               .option("base_url", client.base_url).option("token", client.token)
               .option("backoff_factor", "0.01").load())

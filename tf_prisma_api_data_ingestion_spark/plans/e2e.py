@@ -7,7 +7,7 @@ Differences from the reference, by design:
 - login is explicit per-run (P:73 logs in at import time — §2.5.2);
 - the N+1 per-policy alert pagination (P:256-318) is ONE paginated scan
   + a broadcast join to the policy frame. The driver plans the pages with
-  the ``prisma_alerts`` planner and a thread pool fetches them. A run
+  ``sources.rest.plan_pages`` and a thread pool fetches them. A run
   scans the API ONCE and computes the alert report once: its CSV write is
   the report's only action, and an ``Observation`` on that write counts
   the returned rows;
@@ -66,12 +66,15 @@ def alerts_scan(spark: SparkSession, client: RestClient,
                 **options: str) -> DataFrame:
     """The alerts frame, fetched now as the logged-in ``client``.
 
-    ``options`` are the ``prisma_alerts`` reader options (``base_url``
-    and the auth come from ``client``). The driver plans the pages with
-    ``plan_pages``, one thread per task slot fetches them with
-    ``fetch_page`` in page order, and the rows reach the JVM as one
-    folded ``json_rows`` literal (~112 bytes per alert), so no Python
-    DataSource or Python worker runs.
+    ``options`` are the alert reader options (``sources.rest._AlertsOptions``:
+    ``path``, ``filters``, ``page_size``, ``paging``, ``probe_key``,
+    ``max_pages``, ``rate_limit``; ``base_url`` and the auth come from
+    ``client``). The driver plans the pages with ``plan_pages`` (its
+    docstring holds the paging modes and the ``rate_limit`` budget), one
+    thread per task slot fetches them with ``fetch_page`` in page order,
+    and the rows reach the JVM as one folded ``json_rows`` literal (~112
+    bytes per alert), so no Python worker runs. A scan needing more than
+    ``max_pages`` pages raises ``RuntimeError``.
     """
     opts = _AlertsOptions({**options, "base_url": client.base_url})
     pages = plan_pages(opts, client)

@@ -20,10 +20,11 @@ Scale design: token-chained pagination is inherently serial, so the plain
 total count (X-Total-Count here; a count endpoint in general) or re-usable
 cursors, ``plan_pages`` plans ONE REQUEST PER PAGE and ``fetch_page``
 fetches each independently, paced by not-before stamps. A report run
-fetches its pages from a driver thread pool (``plans.e2e.alerts_scan``);
-bulk backfills read through the ``prisma_alerts`` DataSource, one input
-partition per page, so throughput scales with the cluster instead of the
-reference's 1 page/s driver loop (BASELINE.md).
+fetches its pages from a driver thread pool (``plans.e2e.alerts_scan``),
+so throughput scales with the fetch threads instead of the reference's
+1 page/s driver loop (BASELINE.md). Incremental ingest reads through the
+``prisma_alerts_stream`` DataSource, whose offset counts the alerts
+consumed.
 """
 
 from __future__ import annotations
@@ -53,12 +54,15 @@ class RestResponse:
 def request_with_backoff(url: str, method: str = "GET", headers: dict | None = None,
                          payload: dict | None = None, retries: int = 5,
                          backoff_factor: float = 1.0, timeout: float = 10.0) -> RestResponse:
-    """HTTP request with exponential backoff on 429/5xx (src-backoff).
+    """HTTP request with exponential backoff on 429/5xx and on transport
+    errors (src-backoff).
 
     Sleeps ``backoff_factor * 2**attempt`` between tries — unless the
     server sent a ``Retry-After`` header (seconds form), which takes
     precedence (capped at 60s) — raising after ``retries`` retryable
-    failures. Non-retryable HTTP errors raise immediately.
+    failures. A transport error (socket timeout, connection reset or
+    refused, any other ``URLError``) got no response, so it is retried
+    like a 5xx. Non-retryable HTTP errors raise immediately.
     """
     data = json.dumps(payload).encode() if payload is not None else None
     hdrs = {"Content-Type": "application/json", **(headers or {})}
@@ -69,20 +73,23 @@ def request_with_backoff(url: str, method: str = "GET", headers: dict | None = N
             with urllib.request.urlopen(req, timeout=timeout) as resp:
                 body = json.loads(resp.read() or b"{}")
                 return RestResponse(resp.status, dict(resp.headers), body, attempt + 1)
-        except urllib.error.HTTPError as e:
+        except urllib.error.HTTPError as e:  # a URLError too: caught first
             if e.code not in RETRYABLE:
                 raise
             last_err = e
-            if attempt < retries:
-                time.sleep(_retry_delay(e, backoff_factor, attempt))
+        except (urllib.error.URLError, TimeoutError, ConnectionError) as e:
+            last_err = e
+        if attempt < retries:
+            time.sleep(_retry_delay(last_err, backoff_factor, attempt))
     raise RuntimeError(f"{method} {url}: exhausted {retries} retries") from last_err
 
 
-def _retry_delay(err: urllib.error.HTTPError, backoff_factor: float,
-                 attempt: int) -> float:
+def _retry_delay(err: Exception, backoff_factor: float, attempt: int) -> float:
     """Server-directed Retry-After (seconds form) wins over exponential
-    backoff; HTTP-date form and garbage fall back to the exponential."""
-    ra = err.headers.get("Retry-After") if err.headers else None
+    backoff; HTTP-date form, garbage and a transport error (no headers)
+    fall back to the exponential."""
+    headers = getattr(err, "headers", None)
+    ra = headers.get("Retry-After") if headers else None
     if ra:
         try:
             return min(60.0, max(0.0, float(ra)))
@@ -205,7 +212,7 @@ def fetch_all_pages(client: RestClient, path: str, payload: dict,
 
 # ---------------------------------------------------------------------
 # Alert scan: one page planner and one page fetch, driven from the
-# driver (plans.e2e.alerts_scan) or from the Spark 4 Python DataSource
+# driver (plans.e2e.alerts_scan)
 # ---------------------------------------------------------------------
 
 ALERT_SCHEMA = ("account STRING, accountId STRING, cloudType STRING, "
@@ -239,8 +246,11 @@ class _Page:
 
 
 class _AlertsOptions:
-    """Reader options of the alert scans: the driver scan and the batch
-    and streaming DataSources."""
+    """Reader options of the alert readers: the driver scan
+    (``plans.e2e.alerts_scan``) and the ``prisma_alerts_stream``
+    DataSource. ``token``, ``username``, ``password``, ``prisma_id`` and
+    ``backoff_factor`` build the stream's own client (``_client``); the
+    driver scan fetches as its caller's client."""
 
     def __init__(self, options):
         self.base_url = options["base_url"]
@@ -282,16 +292,47 @@ class _AlertsOptions:
 def plan_pages(opts: _AlertsOptions, client: RestClient) -> list[_Page]:
     """Plan a scan's page requests on the driver, as ``client``.
 
-    - ``indexed``: one limit=1 probe of page 0 learns ``X-Total-Count``,
-      then one page per ``pageToken: "page-{i}"``. No total -> the walk.
-    - ``token-fanout``: walk the cursor chain (cursor-only with
-      ``probe_key``, else bodied and paced), then re-fetch the first
-      discovered cursor once (limit=1); a 4xx means single-use tokens,
-      so the plan degrades to the walk instead of failing N fetches later.
-    - ``token``: one ``walk`` page, the serial chain.
+    Paging modes (option ``paging``):
 
-    Planned pages carry not-before stamps ``t0 + i/rate_limit``, so the
-    aggregate request rate holds whatever the fetch concurrency.
+    - ``indexed`` (default): one limit=1 probe of page 0 learns
+      ``X-Total-Count`` (any header-name case), then one page per
+      ``pageToken: "page-{i}"``. PRECONDITION: the endpoint accepts
+      index-addressable page tokens. The real Prisma Cloud API does not:
+      its ``nextPageToken`` (lambda.py:266-318) is an opaque server-issued
+      token discoverable only by walking the chain. Without a total the
+      plan is the serial walk, so the scan still returns every row; a
+      total needing more than ``max_pages`` pages raises before any page
+      is fetched.
+    - ``token-fanout``: opaque-token parallel mode for production APIs.
+      Walk the cursor chain to enumerate cursors — cheaply when the API
+      supports a cursor-only probe (option ``probe_key``, merged into the
+      payload as ``{probe_key: true}``); without it the walk downloads
+      every body once and discards it, paced (the dataset transfers
+      twice, so prefer ``token`` unless parse is the bottleneck) — then
+      plan one page per cursor. ASSUMPTIONS (checked, not silently
+      skewed): page tokens are RE-USABLE and the dataset is
+      SNAPSHOT-STABLE for the scan. Re-use is probed here by re-fetching
+      the first discovered cursor once (limit=1); a 4xx means single-use
+      tokens, so the plan degrades to the serial walk instead of failing
+      N fetches later. Tokens that expire mid-scan fail ``fetch_page``
+      with a RuntimeError naming ``paging=token``, and a dataset mutating
+      mid-scan can skip or duplicate rows exactly as a serial re-walk
+      would. When in doubt, use ``token``.
+    - ``token``: the strict-token fallback, one ``walk`` page that
+      follows the ``nextPageToken`` chain serially (``fetch_all_pages``).
+      Correct against any conforming API, at the reference's throughput
+      ceiling.
+
+    ``rate_limit`` (float requests/sec, default off) bounds the AGGREGATE
+    page-request rate of the whole scan — the reference's 1 page/s
+    contract (P:268) generalized; per-request backoff alone would let N
+    fetch threads hit the API at N× the rate until 429s throttle them.
+    Planned page i carries the not-before stamp ``t0 + i/rate_limit``; a
+    late fetch fires at once, so a stall can release a short catch-up
+    burst (token-bucket semantics), but the scan's average never exceeds
+    the limit, whatever the fetch concurrency. Every serial walk
+    (``token``, the indexed fallback, a bodied fanout cursor walk) starts
+    pages ``1/rate_limit`` apart. ``max_pages`` bounds every mode.
     """
     tokens = None
     if opts.paging == "token-fanout":
@@ -319,8 +360,12 @@ def plan_pages(opts: _AlertsOptions, client: RestClient) -> list[_Page]:
         total = _total_count(client.post_json(
             opts.path, dict(opts.filters, limit=1)).headers)
         if total is not None:
-            tokens = [None] + [f"page-{i}" for i in
-                               range(1, math.ceil(total / opts.page_size))]
+            n_pages = math.ceil(total / opts.page_size)
+            if n_pages > opts.max_pages:
+                raise RuntimeError(
+                    f"pagination exceeded max_pages={opts.max_pages}: "
+                    f"X-Total-Count {total} needs {n_pages} pages")
+            tokens = [None] + [f"page-{i}" for i in range(1, n_pages)]
     if tokens is None:
         return [_Page(walk=True)]
     t0 = time.time() if opts.interval else 0.0
@@ -331,10 +376,11 @@ def fetch_page(opts: _AlertsOptions, client: RestClient,
                page: _Page) -> Iterable[dict]:
     """The alert items of one planned page, fetched as ``client`` no
     earlier than its not-before stamp; a ``walk`` page streams its chain
-    lazily, paced."""
+    lazily, paced and bounded by ``max_pages``."""
     if page.walk:
         return fetch_all_pages(client, opts.path, opts.filters,
                                page_size=opts.page_size,
+                               max_pages=opts.max_pages,
                                min_interval=opts.interval)
     time.sleep(max(0.0, page.not_before - time.time()))
     try:
@@ -354,97 +400,27 @@ def fetch_page(opts: _AlertsOptions, client: RestClient,
 
 
 def register_alerts_source(spark) -> None:
-    """Register the ``prisma_alerts`` format, the distributed reader for
-    bulk backfills: ``plan_pages`` runs in ``partitions()`` and each
-    planned page is one input partition that an executor fetches with
-    ``fetch_page``. A report run's scan (``plans.e2e.alerts_scan``)
-    drives the same planner and fetch from the driver. Import is deferred
-    so the module stays importable on Spark < 4 (DataSource API is 4.0+).
+    """Register ``prisma_alerts_stream``, the incremental alert reader:
+    a Spark 4 Python streaming DataSource (SimpleDataSourceStreamReader)
+    whose offset ``{"item": n}`` counts the alerts consumed. Import is
+    deferred so the module stays importable on Spark < 4 (DataSource API
+    is 4.0+).
 
-    Paging modes (option ``paging``):
+    Semantics: each micro-batch drains every alert available at trigger
+    time (so ``availableNow`` ingests the whole current backlog in one run
+    and stops): it fetches page ``n // page_size``, drops the first
+    ``n % page_size`` items and reads on until a short page. A restart
+    from checkpoint resumes AFTER the last ingested alert, including
+    alerts appended later to a partial last page — the exactly-once
+    property the reference's rerun-the-whole-export Lambda cannot offer
+    (lambda.py:266-318 re-reads everything every run).
+    ``readBetweenOffsets`` replays exactly the committed ``[start, end)``
+    for failure recovery. Pages are index-addressed (the ``indexed``
+    precondition of ``plan_pages``).
 
-    - ``indexed`` (default): PRECONDITION — the endpoint accepts
-      index-addressable page tokens (``pageToken: "page-{i}"``) and
-      reports ``X-Total-Count`` (any header-name case). Without a total
-      the plan falls back to the serial ``token`` walk, so the scan still
-      returns every row. The real Prisma Cloud API does NOT satisfy the
-      precondition: its ``nextPageToken`` (lambda.py:266-318) is an
-      opaque server-issued token discoverable only by walking the chain.
-    - ``token-fanout``: opaque-token parallel mode for production APIs.
-      The driver walks the chain to enumerate cursors — cheaply when the
-      API supports a cursor-only probe (option ``probe_key``, merged into
-      the payload as ``{probe_key: true}``); without it the walk
-      downloads every body once and discards it (the dataset transfers
-      twice, so prefer ``token`` unless parse is the bottleneck) — then
-      plans one page per cursor.
-
-      ASSUMPTIONS (checked, not silently skewed): page tokens are
-      RE-USABLE and the dataset is SNAPSHOT-STABLE for the scan. Re-use
-      is probed at plan time; single-use tokens degrade the plan to the
-      serial walk. Tokens that expire MID-SCAN fail the re-fetch with a
-      RuntimeError naming ``paging=token``, and a dataset mutating
-      mid-scan can skip or duplicate rows exactly as a serial re-walk
-      would. When in doubt, use ``token``.
-    - ``token``: strict-token fallback — ONE page that walks the
-      ``nextPageToken`` chain serially via ``fetch_all_pages``. Correct
-      against any conforming API, at the reference's throughput ceiling.
-
-    Optional ``username``/``password``/``prisma_id`` options enable
-    executor-side 401 re-login mid-scan (long scans outlive tokens).
-
-    ``rate_limit`` (float requests/sec, default off) bounds the
-    AGGREGATE page-request rate across the whole scan — the reference's
-    1 page/s contract (P:268) generalized; per-request backoff alone
-    would let 32 partitions hit the API at 32× the rate until 429s
-    throttle them. Page i waits for its not-before stamp; a late fetch
-    fires at once, so a stall can release a short catch-up burst
-    (token-bucket semantics), but the whole-scan average never exceeds
-    the limit; across nodes this leans on NTP-level clock sync. Every
-    serial walk (``token``, the indexed fallback, a bodied fanout
-    planning walk) starts pages ``1/rate_limit`` apart.
-    """
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _AlertsReader(_AlertsOptions, DataSourceReader):
-        def partitions(self):
-            return [InputPartition(p) for p in plan_pages(self, self._client())]
-
-        def read(self, partition):
-            for item in fetch_page(self, self._client(), partition.value):
-                yield _alert_row(item)
-
-    class PrismaAlertsDataSource(DataSource):
-        @classmethod
-        def name(cls):
-            return "prisma_alerts"
-
-        def schema(self):
-            return ALERT_SCHEMA
-
-        def reader(self, schema):
-            return _AlertsReader(self.options)
-
-    spark.dataSource.register(PrismaAlertsDataSource)
-
-
-def register_alerts_stream_source(spark) -> None:
-    """Register ``prisma_alerts_stream``: the STREAMING twin of the
-    batch connector — a Spark 4 Python streaming DataSource
-    (SimpleDataSourceStreamReader) whose offset is the page cursor.
-
-    Semantics: each micro-batch drains every page available at trigger
-    time (so ``availableNow`` ingests the whole current backlog in one
-    run and stops); the committed offset is the next unread page, so a
-    restart from checkpoint resumes AFTER the last ingested page — the
-    exactly-once property the reference's rerun-the-whole-export Lambda
-    cannot offer (lambda.py:266-318 re-reads everything every run).
-    ``readBetweenOffsets`` replays a committed page range verbatim for
-    failure recovery.
-
-    Scale note: a page cursor is inherently serial (opaque-token APIs);
-    throughput scales by running one stream per filter shard (e.g. per
-    cloud account), each with its own checkpoint — the partition-per-page
-    BATCH source stays the bulk-backfill path.
+    Scale note: the drain loop is serial; throughput scales by running
+    one stream per filter shard (e.g. per cloud account), each with its
+    own checkpoint. A one-off scan is ``plans.e2e.alerts_scan``.
     """
     from pyspark.sql.datasource import (
         DataSource,
@@ -454,8 +430,8 @@ def register_alerts_stream_source(spark) -> None:
     class _AlertsStreamReader(_AlertsOptions, SimpleDataSourceStreamReader):
         def __init__(self, options):
             super().__init__(options)
-            # same contract as the batch connector's rate_limit: the
-            # drain loop is serial, so pacing is a simple minimum
+            # same contract as the driver scan's rate_limit: the drain
+            # loop is serial, so pacing is a simple minimum
             # inter-request interval (the reference's 1 page/s, P:268)
             self._pacer = _Pacer(self.interval)
 
@@ -464,25 +440,28 @@ def register_alerts_stream_source(spark) -> None:
             return self._items(self._client(), f"page-{page}" if page else None)
 
         def initialOffset(self):
-            return {"page": 0}
+            return {"item": 0}
 
         def read(self, start):
             # drain everything available NOW: loop pages until a short
-            # page; the returned offset is the next unread page
-            page, rows = start["page"], []
+            # page; the returned offset is the next unread alert
+            n, rows = start["item"], []
             while True:
+                page, skip = divmod(n, self.page_size)
                 items = self._fetch(page)
-                rows.extend(_alert_row(i) for i in items)
-                if items:
-                    page += 1
+                new = items[skip:]
+                rows.extend(_alert_row(i) for i in new)
+                n += len(new)
                 if len(items) < self.page_size:
                     break
-            return iter(rows), {"page": page}
+            return iter(rows), {"item": n}
 
         def readBetweenOffsets(self, start, end):
-            rows = []
-            for p in range(start["page"], end["page"]):
-                rows.extend(_alert_row(i) for i in self._fetch(p))
+            lo, hi, rows = start["item"], end["item"], []
+            for page in range(lo // self.page_size, -(-hi // self.page_size)):
+                first = page * self.page_size
+                rows.extend(_alert_row(i) for i in
+                            self._fetch(page)[max(lo - first, 0):hi - first])
             return iter(rows)
 
     class PrismaAlertsStreamSource(DataSource):
