@@ -163,6 +163,33 @@ def test_out_of_range_option_is_rejected(spark, client, option, value):
         alerts_scan(spark, client, **{option: value})
 
 
+def test_datasource_token_mode_single_partition(spark, client):
+    options = {"paging": "token"}
+    # opaque-token APIs can't be index-addressed: one serial walk request
+    assert len(plan_pages(_opts(client, options), client)) == 1
+    assert alerts_scan(spark, client, **options).count() == mock_api.N_ALERTS
+
+
+def test_datasource_token_fanout_parallel_pages(spark, client):
+    """Opaque-token endpoint (no X-Total-Count, md5-style cursors only
+    resolvable server-side): token-fanout must still plan >1 page request
+    and match the serial walk exactly."""
+    options = {**OPAQUE_FANOUT, "probe_key": "countOnly"}
+    assert len(plan_pages(_opts(client, options), client)) == 3  # one per cursor
+    serial = [i["resource"]["accountId"]
+              for i in fetch_all_pages(client, "/v2/alerts-opaque", {})]
+    rows = alerts_scan(spark, client, **options).collect()
+    assert [r.accountId for r in rows] == serial
+    assert len(serial) == mock_api.N_ALERTS
+
+
+def test_datasource_token_fanout_without_probe(spark, client):
+    """Without a probe key the driver walk downloads bodies once and
+    discards them; the fan-out result is still exact."""
+    assert len(plan_pages(_opts(client, OPAQUE_FANOUT), client)) == 3
+    assert alerts_scan(spark, client, **OPAQUE_FANOUT).count() == mock_api.N_ALERTS
+
+
 @pytest.mark.parametrize("page_size,n_parts", [(50, 5), (237, 1), (300, 1)])
 def test_token_fanout_page_size_extremes(spark, client, page_size, n_parts):
     options = {**OPAQUE_FANOUT, "probe_key": "countOnly",
