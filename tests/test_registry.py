@@ -1,13 +1,17 @@
 """Registry integrity — fast, no SparkSession: every driver-facing query
 key must be oracle-paired (the repo's central correctness claim), the
-driver window must be full, and key sets must not collide."""
+driver window must lead QUERIES, and key sets must not collide."""
 
 from __future__ import annotations
+
+import ast
+import pathlib
 
 from tf_prisma_api_data_ingestion_spark.catalog import (
     ORACLES,
     QUERIES,
     THROUGHPUT_QUERIES,
+    _R15_WINDOW,
 )
 
 
@@ -22,8 +26,21 @@ def test_no_orphan_oracles():
 
 
 def test_driver_window_is_full():
-    # the driver's correctness gate checks exactly the first 50 keys
-    assert len(QUERIES) >= 50
+    # the correctness gate walks QUERIES in insertion order and
+    # checks exactly the first 50 keys: they must be the window's 50
+    # distinct keys
+    assert len(set(_R15_WINDOW)) == len(_R15_WINDOW) == 50
+    assert list(QUERIES)[:50] == _R15_WINDOW
+
+
+def test_catalog_literal_has_no_repeated_key():
+    # a repeated key in a dict literal silently drops the earlier entry
+    import tf_prisma_api_data_ingestion_spark.catalog as catalog
+    tree = ast.parse(pathlib.Path(catalog.__file__).read_text())
+    [table] = [n.value for n in tree.body if isinstance(n, ast.AnnAssign)
+               and getattr(n.target, "id", None) == "CATALOG"]
+    keys = [k.value for k in table.keys]
+    assert len(keys) == len(set(keys)) == len(QUERIES)
 
 
 def test_throughput_twins_do_not_shadow_gated_keys():

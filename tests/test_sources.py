@@ -370,6 +370,21 @@ def test_stream_reader_replays_exact_offset_range(url, client):
     assert [r.accountId for r in replay] == [str(9000 + i) for i in range(37, 151)]
 
 
+def test_stream_reader_drain_stops_at_max_pages(url, client):
+    """A drain reads at most max_pages pages: an API that keeps serving
+    full pages must fail the micro-batch, not buffer rows without end."""
+    from types import SimpleNamespace
+    registered = []
+    register_alerts_source(SimpleNamespace(
+        dataSource=SimpleNamespace(register=registered.append)))
+    [source] = registered
+    reader = source({"base_url": url, "token": client.token,
+                     "page_size": "100", "max_pages": "2"}
+                    ).simpleStreamReader(None)
+    with pytest.raises(RuntimeError, match="exceeded max_pages=2"):
+        reader.read(reader.initialOffset())
+
+
 def test_stream_source_rate_limit_paces_pages(spark, url, tmp_path):
     """The streaming drain loop is serial HTTP: rate_limit must enforce a
     minimum inter-request interval (the reference's 1 page/s contract,

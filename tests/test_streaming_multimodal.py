@@ -43,29 +43,6 @@ def test_append_mode_holds_back_open_windows(spark):
     assert appended < total_windows
 
 
-def test_tws_running_totals_or_documented_gate(spark):
-    """transformWithStateInPandas twin: when the environment has protobuf
-    it must match the applyInPandasWithState result exactly; without it,
-    the gate must raise the documented NotImplementedError (never the
-    raw driver-worker crash)."""
-    from tf_prisma_api_data_ingestion_spark.streaming.windows import (
-        stateful_running_totals,
-        transform_with_state_available,
-        tws_running_totals,
-    )
-    if not transform_with_state_available():
-        with pytest.raises(NotImplementedError, match="protobuf"):
-            tws_running_totals(spark, SF_DIR, query_name="t_tws_gate")
-        return
-    got = {(r.event_type, r.n_events, round(r.sum_value, 6))
-           for r in tws_running_totals(spark, SF_DIR,
-                                       query_name="t_tws").collect()}
-    want = {(r.event_type, r.n_events, round(r.sum_value, 6))
-            for r in stateful_running_totals(spark, SF_DIR,
-                                             query_name="t_tws_ref").collect()}
-    assert got == want
-
-
 def test_multimodal_decode_features(spark):
     from tf_prisma_api_data_ingestion_spark.multimodal import (
         fake_decode_features,

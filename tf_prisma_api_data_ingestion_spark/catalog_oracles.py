@@ -1,7 +1,7 @@
-"""DuckDB oracle SQL for every gated catalog key: the ANSI twins the
-driver runs side-by-side with the Spark queries (catalog_queries.py),
-plus the ORACLES registry. Split from the former single-file catalog
-in r8; import through tf_prisma_api_data_ingestion_spark.catalog.
+"""DuckDB oracle SQL, first half (the rest is in catalog_oracles2.py):
+the ANSI twins the driver runs side-by-side with the Spark queries.
+No key is registered here: each key's (query, oracle) entry is in
+catalog.CATALOG. Import through tf_prisma_api_data_ingestion_spark.catalog.
 """
 
 from .catalog_queries import (
@@ -10,8 +10,6 @@ from .catalog_queries import (
     KMV_K,
     _MINHASH_RPB,
 )
-from .plans.inventory import INVENTORY_RUN_SQL as _INVENTORY_RUN_SQL
-from .plans.report import ALERT_REPORT_EVENTS_SQL
 from .operators import text
 from .operators.dedup import minhash_uh_seeds
 

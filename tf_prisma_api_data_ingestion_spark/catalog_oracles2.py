@@ -1,186 +1,20 @@
-"""Second half of the DuckDB oracle SQL (split for file-size hygiene,
-r8): the remaining SQL twins plus the ORACLES registry. Import through
-tf_prisma_api_data_ingestion_spark.catalog.
+"""Second half of the DuckDB oracle SQL (the first is
+catalog_oracles.py): ``SQL_*`` constants and ``_sql_*()`` functions. No
+key is registered here: each key's (query, oracle) entry is in
+catalog.CATALOG. Import through tf_prisma_api_data_ingestion_spark.catalog.
 """
 
-from .catalog_queries import (
-    CMS_DEPTH,
-    CMS_WIDTH,
-    KMV_K,
-    _MINHASH_RPB,
-)
-from .plans.inventory import INVENTORY_RUN_SQL as _INVENTORY_RUN_SQL
-from .plans.report import ALERT_REPORT_EVENTS_SQL
+from .catalog_queries import _MINHASH_RPB
 from .operators import text
 from .catalog_oracles import (
-    _UH_SEEDS_VALUES,  # noqa: F401
-    SQL_ASOF_JOIN,
-    SQL_ASOF_JOIN_FORWARD,
-    SQL_ASOF_JOIN_NEAREST,
-    SQL_DEDUP_CLUSTERS,
-    SQL_DEDUP_EMBEDDING,
-    SQL_DEDUP_EMBEDDING_LSH,
-    SQL_DEDUP_EXACT,
     SQL_DEDUP_INCREMENTAL,
     SQL_DEDUP_MINHASH_MD5,
-    SQL_DEDUP_NGRAM_JACCARD,
-    SQL_DEDUP_PASSAGE_EXACT,
-    SQL_DEDUP_PASSAGE_PAIRS,
-    SQL_DEDUP_SIMHASH_MD5,
-    SQL_DEDUP_SIMHASH_MD5_PAIRS,
-    SQL_MULTIMODAL_DECODE,
-    SQL_MULTIMODAL_EMBED,
-    SQL_MULTIMODAL_FRAME_SAMPLE,
-    SQL_MULTIMODAL_RESIZE,
-    SQL_OP_APPLY_IN_PANDAS,
-    SQL_OP_ARRAY_FUNCTIONS,
-    SQL_OP_ARRAY_INDEX,
-    SQL_OP_COMPACT_FILES,
-    SQL_OP_CORRUPT_CAPTURE,
-    SQL_OP_CUBE,
-    SQL_OP_CUMULATIVE_DISTINCT,
-    SQL_OP_DATE_FUNCTIONS,
-    SQL_OP_DERIVE_TS,
-    SQL_OP_DISTINCT,
-    SQL_OP_EMPTY_GUARD,
-    SQL_OP_EXCEPT,
-    SQL_OP_EXPECTATIONS,
-    SQL_OP_FILLNA,
-    SQL_OP_FOREACH_GROUP,
-    SQL_OP_FUNNEL,
-    SQL_OP_FUZZY_CANONICALIZE,
-    SQL_OP_FUZZY_JOIN,
-    SQL_OP_GAP_FILL,
-    SQL_OP_GROUPAGG_COUNT,
-    SQL_OP_GROUPING_SETS,
-    SQL_OP_HISTOGRAM,
-    SQL_OP_INCREMENTAL_AGG,
-    SQL_OP_INTERSECT,
-    SQL_OP_INTERVAL_MERGE,
-    SQL_OP_JSON_FLATTEN,
-    SQL_OP_LINREG_GROUP,
-    SQL_OP_LIT_COLS,
-    SQL_OP_MAP_FUNCTIONS,
-    SQL_OP_MATH_FUNCTIONS,
-    SQL_OP_MAX_CONCURRENCY,
-    SQL_OP_MERGE_UPSERT,
-    SQL_OP_NULL_FUNCTIONS,
-    SQL_OP_OUTLIER_MAD,
-    SQL_OP_PANDAS_UDAF,
-    SQL_OP_PERCENTILES,
-    SQL_OP_PIVOT,
-    SQL_OP_PROFILE,
-    SQL_OP_PROJECT_RENAME,
-    SQL_OP_RANGE_JOIN,
-    SQL_OP_RETENTION,
-    SQL_OP_ROLLUP,
-    SQL_OP_SALTED_JOIN,
-    SQL_OP_SAMPLE_HASH,
-    SQL_OP_SCD2,
-    SQL_OP_SCHEMA_EVOLUTION,
-    SQL_OP_SEMI_ANTI_JOIN,
-    SQL_OP_SESSIONIZE,
-    SQL_OP_STRATIFIED_SAMPLE,
-    SQL_OP_STRING_AGG,
-    SQL_OP_STRING_FUNCTIONS,
-    SQL_OP_STRUCT_ACCESS,
-    SQL_OP_TABLE_CHECKSUM,
-    SQL_OP_TABLE_DIFF,
-    SQL_OP_TIME_ROLLUP,
-    SQL_OP_UDTF_CHUNK,
-    SQL_OP_UNION_ALL,
-    SQL_OP_UNPIVOT,
-    SQL_OP_UPPER,
-    SQL_OP_URLENCODE,
-    SQL_OP_VARIANT_JSON,
-    SQL_OP_WINDOW_LAG_LEAD,
-    SQL_OP_WINDOW_PERCENT,
-    SQL_OP_WINDOW_RANGE_FRAME,
-    SQL_OP_WINDOW_RANK,
-    SQL_OP_WINDOW_RUNNING_SUM,
-    SQL_OP_WINSORIZED_MEAN,
-    SQL_OP_ZORDER_LAYOUT,
-    SQL_PD_FILTER_EQ,
-    SQL_PD_FILTER_IN,
-    SQL_PD_FILTER_RANGE,
-    SQL_PD_GROUPBY,
-    SQL_PD_LIMIT_PAGE,
-    SQL_PD_SORT,
-    SQL_PLAN_E2E_ALERT,
-    SQL_PLAN_MULTIMODAL_DEDUP,
-    SQL_PLAN_STREAM_REPORT,
-    SQL_SIM_BRUTEFORCE_TOPK,
-    SQL_SIM_LSH_TOPK,
-    SQL_SIM_MULTIPROBE_TOPK,
-    SQL_SINK_CSV,
-    SQL_SINK_PARTITION,
-    SQL_SINK_ROLLBACK,
-    SQL_SKETCH_CMS_TOPK,
-    SQL_SKETCH_KMV_DISTINCT,
-    SQL_SKETCH_KMV_UNION,
-    SQL_SKETCH_QUANTILE,
-    SQL_SQL_SUBQUERIES,
-    SQL_SRC_BACKOFF,
-    SQL_SRC_GET_JSON,
-    SQL_SRC_LOGIN,
-    SQL_SRC_PAGINATED_POST,
-    SQL_SRC_STREAM_ALERTS,
-    SQL_SRC_URL_GEN,
-    SQL_STREAM_DEDUP,
-    SQL_STREAM_FUNNEL,
-    SQL_STREAM_SESSION_WINDOW,
-    SQL_STREAM_SINK_PARQUET,
-    SQL_STREAM_SLIDING_WINDOW,
-    SQL_STREAM_STATEFUL,
-    SQL_STREAM_STATIC_JOIN,
-    SQL_STREAM_STREAM_JOIN,
-    SQL_STREAM_TRENDING_TOPK,
-    SQL_STREAM_UPSERT,
-    SQL_STREAM_WINDOW_AGG,
-    SQL_TEXT_BIGRAM_COUNTS,
-    SQL_TEXT_BIGRAM_LIFT,
-    SQL_TEXT_CONTAMINATION,
-    SQL_TEXT_FINGERPRINT,
-    SQL_TEXT_PACK_SEQUENCES,
-    SQL_TEXT_PII_REDACT,
-    SQL_TEXT_REPETITION,
-    SQL_TEXT_TEMPERATURE_SAMPLE,
-    SQL_TEXT_TFIDF,
-    SQL_TEXT_TOKEN_COUNT,
-    SQL_TEXT_TOP_TOKENS,
-    SQL_TOP_K_PER_GROUP,
-    SQL_TPCH_Q1,
-    SQL_TPCH_Q10,
-    SQL_TPCH_Q11,
-    SQL_TPCH_Q12,
-    SQL_TPCH_Q13,
-    SQL_TPCH_Q14,
-    SQL_TPCH_Q15,
-    SQL_TPCH_Q16,
-    SQL_TPCH_Q17,
-    SQL_TPCH_Q18,
-    SQL_TPCH_Q19,
-    SQL_TPCH_Q2,
-    SQL_TPCH_Q21,
-    SQL_TPCH_Q22,
-    SQL_TPCH_Q3,
-    SQL_TPCH_Q4,
-    SQL_TPCH_Q5,
-    SQL_TPCH_Q6,
-    SQL_TPCH_Q7,
-    SQL_TPCH_Q8,
-    SQL_TPCH_Q9,
     _PARTSUPP_CTE,
     _SQL_COS,
     _SQL_SHINGLES,
     _SQL_WS_TOKENS,
-    _sql_corpus_clean,
-    _sql_corpus_clean_v2,
-    _sql_dedup_keep_best,
-    _sql_lang_id,
+    _UH_SEEDS_VALUES,
     _sql_marker_hits,
-    _sql_plan_corpus_train,
-    _sql_quality,
 )
 
 
@@ -3646,306 +3480,3 @@ FROM p JOIN documents ba ON ba.doc_id = p.new_id
        JOIN documents ca ON ca.doc_id = p.index_id
 GROUP BY 1, 2
 """
-
-
-ORACLES: dict[str, str] = {
-    "plan-feature-store": SQL_PLAN_FEATURE_STORE,
-    "plan-rag-context": SQL_PLAN_RAG_CONTEXT,
-    "dedup-minhash-recall": SQL_DEDUP_MINHASH_RECALL,
-    "stream-drift": SQL_STREAM_DRIFT,
-    "op-markov-eval": SQL_OP_MARKOV_EVAL,
-    "op-te-calibration": SQL_OP_TE_CALIBRATION,
-    "op-negative-sample": SQL_OP_NEGATIVE_SAMPLE,
-    "plan-corpus-report": SQL_PLAN_CORPUS_REPORT,
-    "op-auc": SQL_OP_AUC,
-    "dedup-minhash-recall-sampled": SQL_DEDUP_MINHASH_RECALL_SAMPLED,
-    "sim-lsh-recall": SQL_SIM_LSH_RECALL,
-    "plan-session-features": SQL_PLAN_SESSION_FEATURES,
-    "op-ab-srm": SQL_OP_AB_SRM,
-    "op-drift-ks": SQL_OP_DRIFT_KS,
-    "op-drift-bins": SQL_OP_DRIFT_BINS,
-    "op-gini-diversity": SQL_OP_GINI_DIVERSITY,
-    "op-cramers-v": SQL_OP_CRAMERS_V,
-    "text-lm-likelihood": SQL_TEXT_LM_LIKELIHOOD,
-    "op-knn-classify": SQL_OP_KNN_CLASSIFY,
-    "op-item-cf": SQL_OP_ITEM_CF,
-    "op-target-encode": SQL_OP_TARGET_ENCODE,
-    "op-chi2-terms": SQL_OP_CHI2_TERMS,
-    "op-welch-ttest": SQL_OP_WELCH_TTEST,
-    "op-weighted-sample": SQL_OP_WEIGHTED_SAMPLE,
-    "op-markov-transitions": SQL_OP_MARKOV_TRANSITIONS,
-    "op-benford": SQL_OP_BENFORD,
-    "op-key-profile": SQL_OP_KEY_PROFILE,
-    "op-anomaly-seasonal": SQL_OP_ANOMALY_SEASONAL,
-    "sim-quantize-int8": SQL_SIM_QUANTIZE_INT8,
-    "op-bloom-prefilter": SQL_OP_BLOOM_PREFILTER,
-    "op-fuzzy-join": SQL_OP_FUZZY_JOIN,
-    "op-linreg-group": SQL_OP_LINREG_GROUP,
-    "op-outlier-mad": SQL_OP_OUTLIER_MAD,
-    "op-table-checksum": SQL_OP_TABLE_CHECKSUM,
-    "text-bigram-lift": SQL_TEXT_BIGRAM_LIFT,
-    "op-funnel": SQL_OP_FUNNEL,
-    "op-retention": SQL_OP_RETENTION,
-    "op-expectations": SQL_OP_EXPECTATIONS,
-    "op-winsorized-mean": SQL_OP_WINSORIZED_MEAN,
-    "dedup-passage-exact": SQL_DEDUP_PASSAGE_EXACT,
-    "op-table-diff": SQL_OP_TABLE_DIFF,
-    "dedup-passage-pairs": SQL_DEDUP_PASSAGE_PAIRS,
-    "stream-funnel": SQL_STREAM_FUNNEL,
-    "multimodal-resize": SQL_MULTIMODAL_RESIZE,
-    "multimodal-embed": SQL_MULTIMODAL_EMBED,
-    "plan-multimodal-dedup": SQL_PLAN_MULTIMODAL_DEDUP,
-    "op-string-agg": SQL_OP_STRING_AGG,
-    "op-window-percent": SQL_OP_WINDOW_PERCENT,
-    "op-cumulative-distinct": SQL_OP_CUMULATIVE_DISTINCT,
-    "op-fuzzy-canonicalize": SQL_OP_FUZZY_CANONICALIZE,
-    "pd-filter-eq": SQL_PD_FILTER_EQ,
-    "pd-filter-in": SQL_PD_FILTER_IN,
-    "pd-filter-range": SQL_PD_FILTER_RANGE,
-    "pd-sort": SQL_PD_SORT,
-    "pd-limit-page": SQL_PD_LIMIT_PAGE,
-    "pd-groupby": SQL_PD_GROUPBY,
-    "op-groupagg-count": SQL_OP_GROUPAGG_COUNT,
-    "op-project-rename": SQL_OP_PROJECT_RENAME,
-    "op-upper": SQL_OP_UPPER,
-    "op-fillna": SQL_OP_FILLNA,
-    "op-union-all": SQL_OP_UNION_ALL,
-    "op-lit-cols": SQL_OP_LIT_COLS,
-    "op-derive-ts": SQL_OP_DERIVE_TS,
-    "op-json-flatten": SQL_OP_JSON_FLATTEN,
-    "op-struct-access": SQL_OP_STRUCT_ACCESS,
-    "op-array-index": SQL_OP_ARRAY_INDEX,
-    "op-urlencode": SQL_OP_URLENCODE,
-    "op-empty-guard": SQL_OP_EMPTY_GUARD,
-    "op-foreach-group": SQL_OP_FOREACH_GROUP,
-    "src-url-gen": SQL_SRC_URL_GEN,
-    "op-distinct": SQL_OP_DISTINCT,
-    "op-intersect": SQL_OP_INTERSECT,
-    "op-except": SQL_OP_EXCEPT,
-    "op-rollup": SQL_OP_ROLLUP,
-    "op-sessionize": SQL_OP_SESSIONIZE,
-    "op-apply-in-pandas": SQL_OP_APPLY_IN_PANDAS,
-    "op-salted-join": SQL_OP_SALTED_JOIN,
-    "op-percentiles": SQL_OP_PERCENTILES,
-    "op-pivot": SQL_OP_PIVOT,
-    "op-window-running-sum": SQL_OP_WINDOW_RUNNING_SUM,
-    "tpch-q1": SQL_TPCH_Q1,
-    "tpch-q6": SQL_TPCH_Q6,
-    "op-range-join": SQL_OP_RANGE_JOIN,
-    "op-time-rollup": SQL_OP_TIME_ROLLUP,
-    "op-cube": SQL_OP_CUBE,
-    "op-grouping-sets": SQL_OP_GROUPING_SETS,
-    "op-window-rank": SQL_OP_WINDOW_RANK,
-    "op-semi-anti-join": SQL_OP_SEMI_ANTI_JOIN,
-    "op-unpivot": SQL_OP_UNPIVOT,
-    "op-string-functions": SQL_OP_STRING_FUNCTIONS,
-    "op-math-functions": SQL_OP_MATH_FUNCTIONS,
-    "op-date-functions": SQL_OP_DATE_FUNCTIONS,
-    "op-max-concurrency": SQL_OP_MAX_CONCURRENCY,
-    "sql-subqueries": SQL_SQL_SUBQUERIES,
-    "op-null-functions": SQL_OP_NULL_FUNCTIONS,
-    "text-temperature-sample": SQL_TEXT_TEMPERATURE_SAMPLE,
-    "op-array-functions": SQL_OP_ARRAY_FUNCTIONS,
-    "op-sample-hash": SQL_OP_SAMPLE_HASH,
-    "tpch-q3": SQL_TPCH_Q3,
-    "tpch-q5": SQL_TPCH_Q5,
-    "top-k-per-group": SQL_TOP_K_PER_GROUP,
-    "asof-join": SQL_ASOF_JOIN,
-    "dedup-exact": SQL_DEDUP_EXACT,
-    "dedup-ngram-jaccard": SQL_DEDUP_NGRAM_JACCARD,
-    "dedup-embedding": SQL_DEDUP_EMBEDDING,
-    "dedup-clusters": SQL_DEDUP_CLUSTERS,
-    "dedup-clusters-star": SQL_DEDUP_CLUSTERS,
-    "dedup-minhash-md5": SQL_DEDUP_MINHASH_MD5,
-    "dedup-simhash-md5": SQL_DEDUP_SIMHASH_MD5,
-    "dedup-simhash-md5-pairs": SQL_DEDUP_SIMHASH_MD5_PAIRS,
-    "sim-bruteforce-topk": SQL_SIM_BRUTEFORCE_TOPK,
-    # IVF in exact mode (nprobe == nc) is definitionally brute-force top-k;
-    # the shared oracle pins that equivalence through DuckDB independently.
-    "sim-ivf-topk": SQL_SIM_BRUTEFORCE_TOPK,
-    "text-token-count": SQL_TEXT_TOKEN_COUNT,
-    "text-lang-id": _sql_lang_id(),
-    "text-quality": _sql_quality(),
-    "text-fingerprint": SQL_TEXT_FINGERPRINT,
-    "text-top-tokens": SQL_TEXT_TOP_TOKENS,
-    "text-pii-redact": SQL_TEXT_PII_REDACT,
-    "text-repetition": SQL_TEXT_REPETITION,
-    "text-contamination": SQL_TEXT_CONTAMINATION,
-    "text-pack-sequences": SQL_TEXT_PACK_SEQUENCES,
-    "text-tfidf-top-terms": SQL_TEXT_TFIDF,
-    "op-profile": SQL_OP_PROFILE,
-    "op-corrupt-capture": SQL_OP_CORRUPT_CAPTURE,
-    "src-login": SQL_SRC_LOGIN,
-    "src-get-json": SQL_SRC_GET_JSON,
-    "src-paginated-post": SQL_SRC_PAGINATED_POST,
-    "src-backoff": SQL_SRC_BACKOFF,
-    "src-stream-alerts": SQL_SRC_STREAM_ALERTS,
-    "sink-csv": SQL_SINK_CSV,
-    "sink-partition": SQL_SINK_PARTITION,
-    "sink-rollback": SQL_SINK_ROLLBACK,
-    "stream-window-agg": SQL_STREAM_WINDOW_AGG,
-    "stream-sliding-window": SQL_STREAM_SLIDING_WINDOW,
-    "stream-session-window": SQL_STREAM_SESSION_WINDOW,
-    "stream-stateful-totals": SQL_STREAM_STATEFUL,
-    "stream-stream-join": SQL_STREAM_STREAM_JOIN,
-    "stream-dedup": SQL_STREAM_DEDUP,
-    "stream-sink-parquet": SQL_STREAM_SINK_PARQUET,
-    "multimodal-decode": SQL_MULTIMODAL_DECODE,
-    "multimodal-frame-sample": SQL_MULTIMODAL_FRAME_SAMPLE,
-    "plan-alert-report": ALERT_REPORT_EVENTS_SQL,
-    "plan-inventory-report": _INVENTORY_RUN_SQL,
-    "plan-e2e-alert": SQL_PLAN_E2E_ALERT,
-    "plan-corpus-clean": _sql_corpus_clean(),
-    "plan-corpus-clean-v2": _sql_corpus_clean_v2(),
-    "op-udtf-chunk": SQL_OP_UDTF_CHUNK,
-    "op-pandas-udaf": SQL_OP_PANDAS_UDAF,
-    "op-map-functions": SQL_OP_MAP_FUNCTIONS,
-    "sim-lsh-topk": SQL_SIM_LSH_TOPK,
-    "dedup-embedding-lsh": SQL_DEDUP_EMBEDDING_LSH,
-    "sketch-kmv-distinct": SQL_SKETCH_KMV_DISTINCT,
-    "sketch-quantile": SQL_SKETCH_QUANTILE,
-    # round-4 additions
-    "tpch-q4": SQL_TPCH_Q4,
-    "tpch-q7": SQL_TPCH_Q7,
-    "tpch-q10": SQL_TPCH_Q10,
-    "tpch-q14": SQL_TPCH_Q14,
-    "tpch-q15": SQL_TPCH_Q15,
-    "tpch-q17": SQL_TPCH_Q17,
-    "tpch-q18": SQL_TPCH_Q18,
-    "tpch-q8": SQL_TPCH_Q8,
-    "tpch-q12": SQL_TPCH_Q12,
-    "tpch-q13": SQL_TPCH_Q13,
-    "tpch-q19": SQL_TPCH_Q19,
-    "tpch-q21": SQL_TPCH_Q21,
-    "tpch-q22": SQL_TPCH_Q22,
-    # r6: synthetic-partsupp formulations — full 22/22 TPC-H coverage
-    "tpch-q2": SQL_TPCH_Q2,
-    "tpch-q9": SQL_TPCH_Q9,
-    "tpch-q11": SQL_TPCH_Q11,
-    "tpch-q16": SQL_TPCH_Q16,
-    "tpch-q20": SQL_TPCH_Q20,
-    # r6 retrieval/similarity/graph additions
-    "dedup-prefix-jaccard": SQL_DEDUP_PREFIX_JACCARD,
-    "text-bm25-topk": SQL_TEXT_BM25_TOPK,
-    "op-triangle-count": SQL_OP_TRIANGLE_COUNT,
-    "op-pagerank": SQL_OP_PAGERANK,
-    "op-skyline": SQL_OP_SKYLINE,
-    "dedup-containment": SQL_DEDUP_CONTAINMENT,
-    "op-graph-bfs": SQL_OP_GRAPH_BFS,
-    "plan-leakproof-split": SQL_PLAN_LEAKPROOF_SPLIT,
-    "op-group-cap": SQL_OP_GROUP_CAP,
-    "op-equidepth-histogram": SQL_OP_EQUIDEPTH_HISTOGRAM,
-    "sim-multiprobe-topk": SQL_SIM_MULTIPROBE_TOPK,
-    "stream-trending-topk": SQL_STREAM_TRENDING_TOPK,
-    "sketch-cms-topk": SQL_SKETCH_CMS_TOPK,
-    "op-window-range-frame": SQL_OP_WINDOW_RANGE_FRAME,
-    "op-zorder-layout": SQL_OP_ZORDER_LAYOUT,
-    "stream-static-join": SQL_STREAM_STATIC_JOIN,
-    "stream-upsert": SQL_STREAM_UPSERT,
-    "op-incremental-agg": SQL_OP_INCREMENTAL_AGG,
-    "dedup-incremental": SQL_DEDUP_INCREMENTAL,
-    # r14 streaming twin: drains to bit-equality with the batch pair
-    # set (stream-token-meter pattern), so the oracle IS the batch
-    # pair replay
-    "stream-incr-near": SQL_DEDUP_INCREMENTAL,
-    # r14 persisted-signature-index twin (minhash-md5 family replay,
-    # incremental split)
-    "dedup-incr-lsh-inv": _sql_dedup_incr_lsh(),
-    "op-schema-evolution": SQL_OP_SCHEMA_EVOLUTION,
-    "op-compact-files": SQL_OP_COMPACT_FILES,
-    "asof-join-forward": SQL_ASOF_JOIN_FORWARD,
-    "sketch-kmv-union": SQL_SKETCH_KMV_UNION,
-    "plan-corpus-train": _sql_plan_corpus_train(),
-    "op-variant-json": SQL_OP_VARIANT_JSON,
-    "op-gap-fill": SQL_OP_GAP_FILL,
-    "op-scd2": SQL_OP_SCD2,
-    "op-window-lag-lead": SQL_OP_WINDOW_LAG_LEAD,
-    "op-histogram": SQL_OP_HISTOGRAM,
-    "op-merge-upsert": SQL_OP_MERGE_UPSERT,
-    "op-stratified-sample": SQL_OP_STRATIFIED_SAMPLE,
-    "text-bigram-counts": SQL_TEXT_BIGRAM_COUNTS,
-    "op-interval-merge": SQL_OP_INTERVAL_MERGE,
-    "asof-join-nearest": SQL_ASOF_JOIN_NEAREST,
-    "dedup-keep-best": _sql_dedup_keep_best(),
-    "plan-stream-report": SQL_PLAN_STREAM_REPORT,
-    "op-linreg2-group": SQL_OP_LINREG2_GROUP,
-    "op-ndcg-retrieval": SQL_OP_NDCG_RETRIEVAL,
-    "op-cohens-kappa": SQL_OP_COHENS_KAPPA,
-    "plan-corpus-mix": SQL_PLAN_CORPUS_MIX,
-    "text-vocab-coverage": SQL_TEXT_VOCAB_COVERAGE,
-    "sim-embed-centroids": SQL_SIM_EMBED_CENTROIDS,
-    "op-mrr-retrieval": SQL_OP_MRR_RETRIEVAL,
-    "op-rrf-fusion": SQL_OP_RRF_FUSION,
-    "plan-hybrid-retrieval": SQL_PLAN_HYBRID_RETRIEVAL,
-    "text-dsir-score": SQL_TEXT_DSIR_SCORE,
-    "text-novelty": SQL_TEXT_NOVELTY,
-    "sim-semdedup": SQL_SIM_SEMDEDUP,
-    "sim-silhouette": SQL_SIM_SILHOUETTE,
-    "text-gopher-rules": _sql_gopher(),
-    "plan-curation-report": _sql_curation_report(),
-    "text-corpus-tv": SQL_TEXT_CORPUS_TV,
-    "plan-semdedup-clean": _sql_semdedup_clean(),
-    "op-k-anonymity": SQL_OP_K_ANONYMITY,
-    "stream-quality-gate": _sql_stream_quality_gate(),
-    "sim-semdedup-incr": _sql_semdedup_incr(),
-    "op-wma": SQL_OP_WMA,
-    "op-corr-matrix": SQL_OP_CORR_MATRIX,
-    "sim-kmeans-step": _sql_kmeans_step(),
-    "plan-kmeans-train": _sql_plan_kmeans_train(),
-    "op-train-split": SQL_OP_TRAIN_SPLIT,
-    "op-bootstrap-ci": _sql_op_bootstrap_ci(),
-    "text-contamination-coverage": _sql_text_contamination_coverage(),
-    "text-c4-rules": SQL_TEXT_C4_RULES,
-    "dedup-substring": _sql_dedup_substring(),
-    "op-bpe-merge-step": _sql_op_bpe_merge_step(),
-    "plan-bpe-train": _sql_plan_bpe_train(),
-    "text-quality-classifier": _sql_text_quality_classifier(),
-    "text-c4-badwords": _sql_text_c4_badwords(),
-    "text-span-dedup": _sql_text_span_dedup(),
-    "op-probe-step": _sql_op_probe_step(),
-    "plan-quality-train": _sql_plan_quality_train(),
-    "text-ccnet-buckets": SQL_TEXT_CCNET_BUCKETS,
-    "text-winnow-fingerprints": _sql_text_winnow(),
-    "op-bcubed-eval": SQL_OP_BCUBED_EVAL,
-    "text-stupid-backoff": _sql_text_stupid_backoff(),
-    "plan-filter-agreement": _sql_plan_filter_agreement(),
-    "op-bpe-encode": _sql_op_bpe_encode_registered(),
-    "op-shard-assign": _sql_op_shard_assign(),
-    "text-unigram-segment": _sql_text_unigram_segment_registered(),
-    "op-unigram-estep": _sql_op_unigram_estep_registered(),
-    "text-wordpiece-encode": _sql_text_wordpiece_encode_registered(),
-    "plan-corpus-datasheet": _sql_plan_corpus_datasheet(),
-    "op-vocab-growth": SQL_OP_VOCAB_GROWTH,
-    "op-score-calibration": _sql_op_score_calibration(),
-    "sim-embedding-outliers": SQL_SIM_EMBEDDING_OUTLIERS,
-    "stream-token-meter": _sql_stream_token_meter(),
-    # r11 Arrow tokenizer engines: the *-arrow keys are the SAME
-    # computation on the mapInPandas engine, so they run the SAME
-    # oracles — the driver gate is the cross-engine bit-identity proof
-    "op-bpe-encode-arrow": _sql_op_bpe_encode_registered(),
-    "text-unigram-segment-arrow": _sql_text_unigram_segment_registered(),
-    "text-wordpiece-encode-arrow": _sql_text_wordpiece_encode_registered(),
-    "op-bpe-batch-elect": _sql_op_bpe_batch_elect(),
-    # r12: cross-source passage-duplication provenance matrix —
-    # same window/stride/hot-passage-cap contract as the
-    # dedup-passage twins above
-    "dedup-provenance": SQL_DEDUP_PROVENANCE,
-    "dedup-provenance-near": SQL_DEDUP_PROVENANCE_NEAR,
-    # r13: the daily-ingest shape — landing batch vs accepted corpus
-    "dedup-provenance-incremental": SQL_DEDUP_PROVENANCE_INCR,
-    "dedup-provenance-incr-near": _sql_dedup_provenance_incr_near(),
-    # frozen-index twin: the inventory-fed path is bit-identical to
-    # the direct form by construction (pinned by test), so its oracle
-    # IS the direct form's replay
-    "dedup-provenance-incr-near-inv": _sql_dedup_provenance_incr_near(),
-    "plan-provenance-report": _sql_plan_provenance_report(),
-    "stream-provenance": SQL_STREAM_PROVENANCE,
-    # r13: byte-level (GPT-2 basis) BPE corpus encoding
-    "op-bpe-encode-bytes": _sql_op_bpe_encode_bytes_registered(),
-    # r14: GPT-2 pre-tokenizer + its byte-level encode composition
-    "op-gpt2-pretok": _sql_op_gpt2_pretok(),
-    "op-bpe-encode-gpt2": _sql_op_bpe_encode_gpt2_registered(),
-    # Every QUERIES key has an oracle: non-SQL-expressible queries
-    # (PQ codebooks, HLL, GK, unigram EM) live in THROUGHPUT_QUERIES +
-    # tests instead.
-}

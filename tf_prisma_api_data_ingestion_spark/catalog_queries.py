@@ -1,15 +1,14 @@
-"""Spark-side query catalog: one q_* wrapper per SURVEY.md section-2
-operator / extension family, plus the QUERIES registry and driver
-window. Split from the former single-file catalog in r8 (the DuckDB
-oracle SQL lives in catalog_oracles.py; tf_prisma_api_data_ingestion_spark.catalog re-exports both
-sides, so external imports are unchanged).
+"""Spark-side query catalog, first half: one q_* wrapper per SURVEY.md
+section-2 operator / extension family (the rest are in
+catalog_registry.py). No key is registered here: each key's
+(query, oracle) entry is in catalog.CATALOG, which also sets the
+order the correctness gate samples. Import through tf_prisma_api_data_ingestion_spark.catalog.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,8 +31,7 @@ from .operators.relational import (
     top_k_per_group,
     upper_cols,
 )
-from .plans.inventory import INVENTORY_RUN_SQL as _INVENTORY_RUN_SQL
-from .plans.report import ALERT_REPORT_EVENTS_SQL, alert_report_events
+from .plans.report import alert_report_events
 
 # timestamp bounds for the events window queries (events data is Jan 2024)
 _JAN10_TS = "2024-01-10 00:00:00"

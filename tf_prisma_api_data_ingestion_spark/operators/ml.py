@@ -86,7 +86,7 @@ def item_item_cf(baskets: DataFrame, basket_col: str, item_col: str,
     baskets — the classic Amazon-style item-to-item recommender, computed
     as a basket-grouped self-join (quadratic only within a basket, which
     real baskets bound at tens of items, the same per-group cap argument
-    as the co-occurrence projections in catalog._copurchase_edges).
+    as the co-occurrence projections in catalog_registry._copurchase_edges).
 
     ``max_basket_size`` makes that boundedness ENFORCED rather than
     assumed: baskets with more distinct items are dropped whole before

@@ -409,7 +409,8 @@ def register_alerts_source(spark) -> None:
     Semantics: each micro-batch drains every alert available at trigger
     time (so ``availableNow`` ingests the whole current backlog in one run
     and stops): it fetches page ``n // page_size``, drops the first
-    ``n % page_size`` items and reads on until a short page. A restart
+    ``n % page_size`` items and reads on until a short page; a drain
+    that would need more than ``max_pages`` pages raises. A restart
     from checkpoint resumes AFTER the last ingested alert, including
     alerts appended later to a partial last page — the exactly-once
     property the reference's rerun-the-whole-export Lambda cannot offer
@@ -444,17 +445,19 @@ def register_alerts_source(spark) -> None:
 
         def read(self, start):
             # drain everything available NOW: loop pages until a short
-            # page; the returned offset is the next unread alert
+            # page, at most max_pages of them; the returned offset is
+            # the next unread alert
             n, rows = start["item"], []
-            while True:
+            for _ in range(self.max_pages):
                 page, skip = divmod(n, self.page_size)
                 items = self._fetch(page)
                 new = items[skip:]
                 rows.extend(_alert_row(i) for i in new)
                 n += len(new)
                 if len(items) < self.page_size:
-                    break
-            return iter(rows), {"item": n}
+                    return iter(rows), {"item": n}
+            raise RuntimeError(
+                f"pagination exceeded max_pages={self.max_pages}")
 
         def readBetweenOffsets(self, start, end):
             lo, hi, rows = start["item"], end["item"], []

@@ -169,103 +169,6 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str,
                  F.max_by("sum_value", "n_events").alias("sum_value")))
 
 
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas speaks protobuf between the JVM and its
-    Python state server; without the ``protobuf`` package the driver
-    worker crashes at init. Probe so callers/tests can gate cleanly
-    (this sandbox ships pyspark without protobuf; clusters with
-    ``pip install pyspark[connect]`` or protobuf present run it)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def tws_running_totals(spark: SparkSession, sf_dir: str,
-                       query_name: str = "tws_totals",
-                       state_partitions: int = DEFAULT_STATE_PARTITIONS) -> DataFrame:
-    """``stateful_running_totals`` on the transformWithStateInPandas API
-    (Spark 4's arbitrary-stateful successor to applyInPandasWithState):
-    per-event-type running (count, exact micro-unit sum) in a typed
-    ValueState owned by a StatefulProcessor.
-
-    Why the new API matters at scale: state is schema'd and composable
-    (Value/List/Map state per processor instead of one monolithic tuple),
-    supports per-key timers and state TTL natively, and state rows are
-    evolvable without a checkpoint rewrite — the operational properties
-    an always-on 100 TB/day stream needs. Semantics here are identical
-    to the applyInPandasWithState twin, so the same SQL oracle checks
-    this path end to end.
-    """
-    if not transform_with_state_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the 'protobuf' package for "
-            "its JVM<->Python state protocol, which this environment does "
-            "not ship; use stateful_running_totals (applyInPandasWithState"
-            " — identical semantics, same oracle) instead")
-
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            schema = StructType([StructField("n", LongType(), True),
-                                 StructField("total_micro", LongType(), True)])
-            self._totals = handle.getValueState("totals", schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total_micro = (self._totals.get() if self._totals.exists()
-                              else (0, 0))
-            for pdf in rows:
-                n += len(pdf)
-                # exact accumulation in integer micro-units (float sums
-                # drift vs the oracle) — same rule as the twin above
-                total_micro += int(round(pdf["value"].map(
-                    lambda v: int(round(v * 1_000_000))).sum()))
-            self._totals.update((n, total_micro))
-            yield pd.DataFrame({"event_type": [key[0]], "n_events": [n],
-                                "sum_value": [total_micro / 1_000_000]})
-
-        def close(self) -> None:
-            pass
-
-    stream = _event_stream(spark, sf_dir)
-    out = (stream.groupBy("event_type")
-           .transformWithStateInPandas(
-               RunningTotals(),
-               outputStructType=("event_type STRING, n_events LONG, "
-                                 "sum_value DOUBLE"),
-               outputMode="Update",
-               timeMode="None"))
-    # transformWithState requires the RocksDB state store (its typed
-    # column-family state layout isn't implemented by the default
-    # HDFS-backed provider); scope the provider to this drain so the
-    # watermarked-agg queries keep the in-heap store that wins at their
-    # state volume (module scale notes above)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key,
-                   "org.apache.spark.sql.execution.streaming.state."
-                   "RocksDBStateStoreProvider")
-    try:
-        with _state_partitions(spark, state_partitions):
-            q = (out.writeStream.format("memory").queryName(query_name)
-                 .outputMode("update").trigger(availableNow=True).start())
-            q.awaitTermination()
-    finally:
-        if old_provider is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old_provider)
-    # update mode emits one row per key per micro-batch; running totals
-    # only grow, so the final state row per key is the max_by(n_events)
-    return (spark.table(query_name).groupBy("event_type")
-            .agg(F.max("n_events").alias("n_events"),
-                 F.max_by("sum_value", "n_events").alias("sum_value")))
-
-
 def sliding_event_counts(spark: SparkSession, sf_dir: str,
                          window: str = "1 hour", slide: str = "30 minutes",
                          watermark: str = "10 minutes",

@@ -170,15 +170,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(read_schema("events")).parquet(path)
 
 
-def event_ts(col: str = "ts"):
-    """Canonical event-time column (TIMESTAMP) for frames produced by
-    ``load`` — POST-normalization only. Do NOT point this at a raw
-    legacy nanos-long column (a LONG cast to timestamp is read as epoch
-    SECONDS, silently landing ~50,000 years out); raw legacy frames go
-    through ``normalize_legacy_ts`` (or just use ``load``) first."""
-    return F.col(col).cast("timestamp")
-
-
 def event_ts_us(col: str = "ts"):
     """events.ts -> epoch-microseconds LONG, for operators that work on
     numeric time axes (sessionize / as-of / range-join / rollup)."""
@@ -237,9 +228,3 @@ def assert_contract(spark: SparkSession, sf_dir: str) -> None:
         raise AssertionError(
             "testdata schema contract violated (tables.TABLE_FIELDS "
             "needs updating):\n  " + "\n  ".join(problems))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql(...) works too."""
-    for name in TABLE_NAMES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
